@@ -1,4 +1,4 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
@@ -34,7 +34,7 @@ therefore also writes the full per-query ledger (seconds + cohort id)
 to ``bench_ledger.json`` at the repo root ($SPARK_GRAFT_BENCH_LEDGER to
 override); the stdout JSON ends with the ``ledger_file`` pointer so the
 surviving tail always says where the complete record lives. A PARTIAL
-run (overridden HEADLINE / anything short of the full registry)
+run (``main(names=[...])`` with anything short of the full registry)
 defaults to ``bench_ledger.partial.json`` (gitignored) instead, so a
 smoke can never clobber the committed full-registry artifact.
 
@@ -59,329 +59,7 @@ import subprocess
 import sys
 import time
 
-# Headline set: the COMPLETE registry (ledger closed in round 9 — every
-# registered batch query is benched every round; scripts/registry_audit.py
-# asserts 0 unbenched). The "within 2× of baseline at the same sf" gate
-# applies to every declared query, not a representative subset.
-HEADLINE: list[str] = [
-    "customer_segments",
-    "product_insights",
-    "order_analytics",
-    "pricing_summary",
-    "latest_state",
-    "user_activity",
-    "alerts_summary",
-    "minhash_lsh_pairs",
-    "simhash_near_pairs",
-    "embed_near_dup_lsh",
-    "semantic_dedup",
-    "ann_cosine_topk",
-    "ann_ivf_topk",
-    "doc_token_stats",
-    "clean_corpus",
-    "asof_purchase_attribution",
-    "user_sessions",
-    "scd2_history",
-    "corpus_bigrams",
-    "dedup_components",
-    "top_parts_per_brand",
-    "span_dedup_coverage",
-    "doc_chunks",
-    "term_postings",
-    "embedding_quantize",
-    "ann_pq_topk",
-    "doc_lm_score",
-    "incremental_dedup",
-    "shard_manifest",
-    "purchase_context_window",
-    "dsir_importance",
-    "quality_classifier",
-    "source_semantic_diversity",
-    "compression_gate",
-    "image_phash_dedup",
-    "ts_similarity_topk",
-    "copurchase_pagerank",
-    "fulfillment_lag",
-    "semantic_dedup_imi",
-    "ann_ivfpq_topk",
-    "copurchase_pairs",
-    "basket_rules",
-    "dedup_ledger",
-    "token_quota_by_source",
-    "winsorize_values",
-    "kmv_distinct_by_type",
-    "local_supplier_volume",
-    "returned_item_report",
-    # round 6
-    "promo_revenue_share",
-    "min_cost_supplier",
-    "customer_reach",
-    "value_drift",
-    "containment_pairs",
-    "edit_distance_pairs",
-    "embedding_dim_stats",
-    "lexical_stats",
-    "event_transitions",
-    "bigram_lift",
-    "source_vocab_overlap",
-    "ngram_novelty",
-    "late_order_priorities",
-    "priority_shipping_split",
-    "part_supplier_variety",
-    "bulk_order_customers",
-    "forecast_revenue_change",
-    "state_diff",
-    "state_dwell_times",
-    "lsh_recall_eval",
-    "small_lot_revenue",
-    "bilateral_trade_volume",
-    "market_share",
-    "customer_order_distribution",
-    "sole_blame_suppliers",
-    "curated_training_set",
-    "image_png_roundtrip",
-    "product_type_profit",
-    "important_stock",
-    "top_supplier",
-    "discounted_revenue",
-    "part_promotion_suppliers",
-    "bloom_pruned_revenue",
-    "event_autocorr",
-    "revenue_trend",
-    "quality_calibration",
-    "robust_anomalies",
-    "phrase_search",
-    "source_mix_plan",
-    # round 7: coverage pass (registry_audit unbenched list) — the two
-    # r7 plan-changed queries first, then one representative per
-    # previously-unbenched family
-    "shipping_priority",
-    "anomaly_geo_concentration",
-    "cdc_stats",
-    "change_log",
-    "minute_metrics",
-    "geo_distribution",
-    "revenue_analytics",
-    "entity_lifecycle",
-    "running_revenue",
-    "state_asof",
-    "key_skew_report",
-    "data_quality_report",
-    "k_anonymity_report",
-    "training_shuffle",
-    "value_histogram",
-    "countmin_sketch",
-    "dedup_survivor_weights",
-    "stratified_kfold",
-    "time_to_convert",
-    "multimodal_features",
-    "multimodal_audio_stats",
-    "semantic_cell_stats",
-    "ngram_jaccard_pairs",
-    "lsh_bucket_stats",
-    "ann_lsh_topk",
-    "pq_codes",
-    "service_health",
-    "text_normalize",
-    "embedding_outliers",
-    "cluster_representatives",
-    "corpus_gate_funnel",
-    "conversion_funnel",
-    "retention_cohorts",
-    "bpe_token_count",
-    "pii_scrub",
-    "tfidf_top_terms",
-    "pack_sequences",
-    "kmeans_refine",
-    "image_jpeg_roundtrip",
-    "bm25_topk",
-    "copurchase_triangles",
-    "trending_products",
-    "hybrid_rrf_search",
-    "gap_filled_daily_revenue",
-    "rolling_median_value",
-    "incremental_agg_refresh",
-    "time_weighted_value",
-    "pps_token_sample",
-    "order_backlog_timeline",
-    "revenue_changepoint",
-    "trailing_window_rate",
-    "table_stats",
-    "benford_digit_audit",
-    "fk_integrity_audit",
-    "pareto_frontier_orders",
-    "weighted_median_price",
-    "interpolated_daily_revenue",
-    "chisq_independence",
-    "pk_uniqueness_audit",
-    "kmv_set_overlap",
-    "top_event_paths",
-    "orderkey_islands",
-    "ab_test_zscores",
-    "cohort_ltv_curves",
-    "order_status_streaks",
-    "rfm_scores",
-    "market_concentration_hhi",
-    "weekday_seasonality",
-    "spend_gini",
-    "duplicate_order_pairs",
-    "new_vs_returning_revenue",
-    # round 8
-    "window_funnel_levels",
-    "heavy_hitters_cms",
-    "bpe_merge_candidates",
-    "half_life_popularity",
-    "revenue_marginals",
-    # round 9: bench-ledger close — the 59 early-round queries that had
-    # driver correctness rows but no official HEADLINE timing
-    "active_customer_profile",
-    "anomaly_bulk_events",
-    "anomaly_high_value",
-    "anomaly_velocity",
-    "approx_distinct_native",
-    "bitwise_region_filter",
-    "boilerplate_ratio",
-    "category_distribution",
-    "cdc_stats_total",
-    "churned_customers_yoy",
-    "contamination_check",
-    "corpus_datacard",
-    "customer_order_gaps",
-    "customer_order_sets",
-    "customer_spend_running",
-    "customers_without_orders",
-    "daily_revenue_rolling7",
-    "daily_rollup",
-    "dedup_exact",
-    "dedup_prefix",
-    "disjunctive_filter",
-    "doc_fingerprint",
-    "doc_length_by_lang",
-    "doc_quality",
-    "doc_repetition",
-    "dup_cluster_stats",
-    "duplicate_spans",
-    "embed_near_dup_pairs",
-    "entity_running_totals",
-    "event_op_filter",
-    "label_centroids",
-    "lang_id",
-    "lang_temperature_sample",
-    "minhash_signatures",
-    "multimodal_binary_meta",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "ngram_contamination",
-    "order_priority_pivot",
-    "order_status_rollup",
-    "order_status_rollup_cube",
-    "parts_never_sold",
-    "pipeline_health",
-    "price_deciles",
-    "product_velocity",
-    "quality_topk_sample",
-    "random_pick",
-    "region_rollup",
-    "repeat_customers_yoy",
-    "segment_histogram",
-    "simhash_fingerprints",
-    "small_order_filter",
-    "source_overlap",
-    "source_quota_sample",
-    "stock_status_histogram",
-    "stratified_sample",
-    "supplier_rollup",
-    "time_range_filter",
-    "train_test_split",
-    # round 9: new operators
-    "winnowed_fingerprints",
-    "winnow_match_pairs",
-    "vocab_coverage",
-    "content_defined_chunks",
-    "chunk_dedup_report",
-    "approx_percentile_native",
-    # round 10: new operators
-    "chunk_dedup_ledger",
-    "image_phash_near_pairs",
-    "embedding_top_direction",
-    "embedding_isotropy_report",
-    "winnow_match_spans",
-    "zorder_file_skipping",
-    "bootstrap_revenue_means",
-    "source_quantile_align",
-    "l_diversity_report",
-    "embedding_truncation_recall",
-    "rank_overlap_rbo",
-    "erasure_cascade_audit",
-    "postings_compression_plan",
-    "binned_quantiles_by_type",
-    "neyman_allocation_plan",
-    "split_leakage_report",
-    "four_step_path_counts",
-    # round 10, second batch
-    "functional_dependency_audit",
-    "retrieval_ndcg_eval",
-    "heaps_law_fit",
-    "zipf_law_fit",
-    "packing_waste_curve",
-    "multi_touch_attribution",
-    "minhash_threshold_sweep",
-    "transition_entropy",
-    "audio_silence_segments",
-    "lang_id_confusion",
-    "lang_id_class_metrics",
-    "event_burstiness",
-    "partition_layout_advisor",
-    "bloom_sizing_plan",
-    "psi_drift",
-    "revenue_decomposition",
-    "copurchase_degree_histogram",
-    "copurchase_graph_profile",
-    "parts_in_all_regions",
-    # round 11: new operators
-    "tokenizer_fertility",
-    "ccnet_lm_buckets",
-    "epoch_allocation_plan",
-    "wilson_quality_ci",
-    "source_divergence_report",
-    "label_propagation_communities",
-    "time_series_cv_folds",
-    "blocking_efficiency_report",
-    "hll_distinct_by_type",
-    "k_core_decomposition",
-    "repurchase_survival_km",
-    # round 12
-    "prefix_filter_jaccard_pairs",
-    "group_kfold_assignment",
-    "rolling_distinct_users",
-    "ks_drift",
-    "join_size_estimates",
-    "gopher_rules_report",
-    "forecast_backtest_mae",
-    "link_prediction_jaccard",
-    "mann_whitney_drift",
-    "auc_separation_report",
-    "ab_power_planner",
-    "theil_sen_trend",
-    "spearman_corr_matrix",
-    "did_promo_effect",
-    "conformal_forecast_intervals",
-    "mutual_information_matrix",
-    "embedding_lof",
-    "cusum_drift",
-    "caliper_matched_price_effect",
-    "lexical_concentration_report",
-    "skew_salt_plan",
-    "shewhart_imr_chart",
-    "simpsons_paradox_audit",
-    "quality_pr_curve",
-    "fellegi_sunter_weights",
-    "time_series_quantile_trend",
-    "jl_projection_distortion",
-    "semantic_silhouette",
-    "k_truss_decomposition",
-    "bootstrap_uplift_ci",
-]
+from cdc_stream_batch_etl_spark import registry
 
 
 #: Queries that run ALONE in their own fresh-JVM cohort. The heavy Arrow
@@ -463,9 +141,19 @@ def _failed_tasks(spark) -> int:
     return total
 
 
+def time_query(spark, name: str, sf_dir: str) -> float:
+    """Seconds to build and fully run one registered query (noop write).
+
+    Queries may persist() intra-query intermediates, so the cache is
+    dropped first: every timed run starts from parquet."""
+    spark.catalog.clearCache()
+    t0 = time.perf_counter()
+    registry.QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
 def run_cohort(names: list[str], sf_dir: str, log_path: str) -> None:
     """Child mode: bench ``names`` in this (fresh) JVM, print partial JSON."""
-    from cdc_stream_batch_etl_spark import registry
     from cdc_stream_batch_etl_spark.session import get_spark
 
     # fd-level redirect BEFORE the JVM launches so it inherits the fd; the
@@ -488,23 +176,14 @@ def run_cohort(names: list[str], sf_dir: str, log_path: str) -> None:
         # warm the JVM + parquet footers once, outside the timed region
         spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
-        def run_once(name: str) -> float:
-            # queries may persist() intra-query intermediates; drop them
-            # between runs so every timed run starts from parquet
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df = registry.QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            return time.perf_counter() - t0
-
         timings: dict[str, float] = {}
         for name in names:
-            samples = [run_once(name), run_once(name)]
+            samples = [time_query(spark, name, sf_dir) for _ in range(2)]
             # shared-box contention can inflate a sample several-fold; when
             # the two runs disagree badly, take a third so one spike can't
             # both be the min — still bounded at 3 runs per query
             if max(samples) > 1.5 * min(samples):
-                samples.append(run_once(name))
+                samples.append(time_query(spark, name, sf_dir))
             timings[name] = round(min(samples), 3)
 
         failed = _failed_tasks(spark)
@@ -532,7 +211,8 @@ def ledger_default_name(official: bool, full_run: bool) -> str:
     )
 
 
-def main() -> None:
+def main(names: list[str] | None = None) -> None:
+    """Bench ``names`` (default: the whole registry) in fresh-JVM cohorts."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     log_base = os.environ.get("SPARK_GRAFT_BENCH_LOG", "/tmp/bench_stderr.log")
 
@@ -545,10 +225,9 @@ def main() -> None:
         run_cohort(argv[1].split(","), sf_dir, log_base)
         return
 
-    from cdc_stream_batch_etl_spark import registry
-
     registry.load_all()
-    names = [n for n in HEADLINE if n in registry.QUERIES]
+    if names is None:
+        names = list(registry.QUERIES)
     cohort_size = int(os.environ.get("SPARK_GRAFT_BENCH_COHORT", "12"))
     grouped = [n for n in names if n not in ISOLATE]
     cohorts = [grouped[i : i + cohort_size] for i in range(0, len(grouped), cohort_size)]
@@ -657,7 +336,7 @@ def main() -> None:
     # The full per-query ledger is written to the repo as an artifact
     # each run; the stdout JSON carries only the pointer, placed LAST in
     # the dict so tail truncation cannot drop it.
-    # Partial runs (a smoke with an overridden HEADLINE, or any set
+    # Partial runs (a smoke via ``main(names=[...])``, or any set
     # smaller than the full registry) must never clobber the committed
     # full-registry artifact — and neither may a FULL run that was not
     # explicitly flagged --official (the r10 driver bench overwrote the

@@ -65,10 +65,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all testdata tables as temp views for the SQL API."""
     for n in TABLES:

@@ -27,7 +27,7 @@ Spark implementation — two algorithms behind one API:
   tiny (pairs/triangles/short chains), so it converges in 2-3 rounds and
   skips the edge-reorientation work.
 
-Both truncate lineage per round with localCheckpoint so plans don't grow
+Both truncate lineage per round with materialize() so plans don't grow
 exponentially, and both stop on the first round with no change.
 
 Output: every document with its canonical id and a keep/drop flag —
@@ -176,7 +176,7 @@ def connected_components(
             .groupBy("dst")
             .agg(F.min("label").alias("nb_label"))
         )
-        new_labels = (
+        new_labels = materialize(
             labels.join(nb_min, labels["id"] == nb_min["dst"], "left")
             .select(
                 "id",
@@ -185,7 +185,6 @@ def connected_components(
                 ),
                 "label",
             )
-            .localCheckpoint()
         )
         changed = new_labels.filter(F.col("new_label") != F.col("label")).count()
         labels = new_labels.select("id", F.col("new_label").alias("label"))

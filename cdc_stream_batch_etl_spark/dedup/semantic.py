@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.materialize import materialize
 from ..functions.parallelism import fan_out
 from ..registry import register
 from ..similarity.linalg import adaptive_stride_sql, centroids
@@ -191,7 +192,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r13: scan-local argmax assignment (see _with_cell) — no N x K
     # explode, no array-keyed groupBy shuffle
-    assign = (
+    assign = materialize(
         _with_cell(e, cent)
         .select("vec_id", "emb", "nrm", "cell")
         # rank INSIDE the checkpoint: both pair sides and the annotation
@@ -199,8 +200,8 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cell-ranking window each run exactly once (a window after the
         # checkpoint would re-shuffle the embedding arrays once per
         # consumer — measured 4x slower at the x8 probe scale)
-        .withColumn("rk", F.row_number().over(Window.partitionBy("cell").orderBy("vec_id")))
-        .localCheckpoint(eager=False)
+        .withColumn("rk", F.row_number().over(Window.partitionBy("cell").orderBy("vec_id"))),
+        eager=False,
     )
 
     capped = assign.filter(F.col("rk") <= MAX_CELL)

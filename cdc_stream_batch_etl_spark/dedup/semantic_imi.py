@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.materialize import materialize
 from ..registry import register
 from ..similarity.linalg import CENTROID_STRIDE
 from ..similarity.linalg import dot as _dot
@@ -128,7 +129,7 @@ def semantic_dedup_imi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cent = _imi_centroids(halves.select("vec_id", "lo", "hi"))
 
-    assign = (
+    assign = materialize(
         halves.crossJoin(F.broadcast(cent))
         .withColumn("dlo", _dot("lo", "clo"))
         .withColumn("dhi", _dot("hi", "chi"))
@@ -150,8 +151,8 @@ def semantic_dedup_imi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(
                 Window.partitionBy("cell_lo", "cell_hi").orderBy("vec_id")
             ),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
 
     capped = assign.filter(F.col("rk") <= MAX_CELL)

@@ -6,10 +6,6 @@ shuffle — the decode pipeline is scan-local, SURVEY §2.11). The container
 has no image libraries (PIL/opencv), so instead of stubbing the decode we
 make the FORMAT simple enough to be real without them:
 
-- ``encode_bmp``   — builds a genuine, spec-conformant 24-bit BMP binary
-  per document (dimensions derived deterministically from the document's
-  sha256 digest; pixel rows tile the digest). Any external BMP viewer
-  could open these payloads.
 - ``decode_bmp_features`` — a REAL decoder: parses the BITMAPFILEHEADER /
   BITMAPINFOHEADER with ``struct``, validates magic/bpp/offset, extracts
   the padded pixel raster with numpy, and computes metadata + an exact
@@ -139,14 +135,6 @@ def _doc_pixels(text: str) -> np.ndarray:
     return np.broadcast_to(row, (height, width * 3)).reshape(height, width, 3)
 
 
-_PAYLOAD_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-
 def spread_for_codec(df: DataFrame, key: str = "doc_id") -> DataFrame:
     """Hash-spread a narrow input across every core before a CPU-heavy
     Arrow codec pass.
@@ -163,25 +151,6 @@ def spread_for_codec(df: DataFrame, key: str = "doc_id") -> DataFrame:
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n, key)
     return df
-
-
-def encode_bmp(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """documents → (doc_id, payload: binary) of real BMP images.
-
-    Arrow-batched, 1:1, no shuffle — the 'ingest' half of the multimodal
-    pipeline. Output payloads are spec-conformant 24-bit BMPs."""
-    df = spread_for_codec(df, id_col)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "payload": [bmp_encode(_doc_pixels(t)) for t in pdf[text_col]],
-                }
-            )
-
-    return df.mapInPandas(fn, schema=_PAYLOAD_SCHEMA)
 
 
 _FEATURES_SCHEMA = T.StructType(

@@ -63,7 +63,6 @@ from ..registry import register
 from .binaryops import (
     _DIGEST_BYTES,
     _HEXMAP,
-    _PAYLOAD_SCHEMA,
     _doc_pixels,
     spread_for_codec,
 )
@@ -737,24 +736,6 @@ _ROUNDTRIP_SCHEMA = T.StructType(
         T.StructField("pixel_bytes", T.LongType()),
     ]
 )
-
-
-def encode_jpeg(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """documents → (doc_id, payload: binary) of real baseline JPEGs."""
-    df = spread_for_codec(df, id_col)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "payload": [
-                        jpeg_encode(_doc_pixels(t), JPEG_QUALITY) for t in pdf[text_col]
-                    ],
-                }
-            )
-
-    return df.mapInPandas(fn, schema=_PAYLOAD_SCHEMA)
 
 
 @register("image_jpeg_roundtrip", oracle=_JPEG_ORACLE)

@@ -44,7 +44,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table
 from ..registry import register
-from .binaryops import _FEATURES_ORACLE, _PAYLOAD_SCHEMA, _doc_pixels, spread_for_codec
+from .binaryops import _FEATURES_ORACLE, _doc_pixels, spread_for_codec
 
 _SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -153,22 +153,6 @@ def png_decode(payload: bytes) -> np.ndarray:
         prev = _unfilter(ftype, row, prev, 3)
         out[y] = prev
     return out.astype(np.uint8).reshape(h, w, 3)
-
-
-def encode_png(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """documents → (doc_id, payload: binary) of real zlib-compressed PNGs."""
-    df = spread_for_codec(df, id_col)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "payload": [png_encode(_doc_pixels(t)) for t in pdf[text_col]],
-                }
-            )
-
-    return df.mapInPandas(fn, schema=_PAYLOAD_SCHEMA)
 
 
 _ROUNDTRIP_SCHEMA = T.StructType(

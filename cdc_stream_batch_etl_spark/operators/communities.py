@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.materialize import materialize
 from ..registry import register
 from .graphprofile import _EDGES_CTE, _directed, _edges
 
@@ -79,15 +80,15 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
         nbr = directed.join(labels, directed["v"] == labels["node"]).select(
             F.col("u").alias("node"), "lbl"
         )
-        labels = (
+        labels = materialize(
             labels.unionByName(nbr)
             .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
+            .agg(F.min("lbl").alias("lbl")),
             # each round is consumed TWICE by the next (self + neighbor
             # branch): without a lineage break the 2^K fan re-runs the
-            # whole prefix per branch (lm.py's localCheckpoint precedent
+            # whole prefix per branch (lm.py's lazy materialize precedent
             # — lazy, materialized once at first use, GC-cleaned)
-            .localCheckpoint(eager=False)
+            eager=False,
         )
     return (
         labels.groupBy("lbl")

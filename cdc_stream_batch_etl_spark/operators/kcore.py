@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.materialize import materialize
 from ..registry import register
 from .graphprofile import _EDGES_CTE, _directed, _edges
 
@@ -114,13 +115,13 @@ def k_core_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         keep = degs.filter(F.col("deg") >= CORE_K).select(F.col("u").alias("node"))
-        e = (
+        e = materialize(
             e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-            .select("u", "v")
+            .select("u", "v"),
             # each round feeds the degree agg AND the next round's two
             # semi-joins — break the lineage so it computes once
-            .localCheckpoint(eager=False)
+            eager=False,
         )
     summaries.append(
         e.agg(

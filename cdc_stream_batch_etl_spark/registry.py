@@ -11,6 +11,8 @@ before value-hashing.
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 from typing import Any
 
@@ -157,6 +159,10 @@ WINDOW_PRIORITY: tuple[str, ...] = (
 )
 
 
+#: Every module under these packages is imported by ``load_all``.
+QUERY_PACKAGES: tuple[str, ...] = ("operators", "text", "dedup", "similarity", "multimodal")
+
+
 def register(name: str, oracle: str | None = None):
     def deco(fn):
         QUERIES[name] = fn
@@ -168,254 +174,19 @@ def register(name: str, oracle: str | None = None):
 
 
 def load_all() -> None:
-    """Import every operator module so registration side-effects run.
+    """Import every query module so registration side-effects run, then
+    move the ``WINDOW_PRIORITY`` names to the front of ``QUERIES``.
 
-    Registration order is deliberate: the driver's correctness harness
-    iterates ``queries()`` in dict (= registration) order and reaches only
-    the first ~50 entries per round. Rotation history:
-      r1  — reference-parity operators first → all 50 parity queries green.
-      r2/r3 — training-data-pipeline families first → all 49 oracled
-              pipeline queries green (ann_lsh_topk declared rows-only).
-      r4  — funnel/monitoring trio + semantic_dedup/bpe_token_count, then
-              the parity re-verification under the r2 catalog timestamp
-              normalization → 49/50 green (random_pick rows-only).
-      r5  — the 14 round-4 additions took their first driver rows, then
-              the 6-query parity tail, then the change-sensitive core →
-              49/50 full green (compression_gate rows-only by design).
-      r6  — the window became import-order-independent: after every
-              module registers, ``load_all`` reorders ``QUERIES`` by the
-              explicit ``WINDOW_PRIORITY`` list. 50/50 green.
-      r7  — the 13 never-driver-checked operators led (closing the
-              216-query ledger), then the 11 de-hinted broadcast
-              queries, then the change-sensitive core. 50/50 green.
-      r8  — ledger closed, so the window shifted to maintenance: new
-              queries first, every changed oracle/plan second, sentinels
-              third, then staleness rotation (the r3-cohort greens
-              re-verified). 50/50 green.
-      r9  — same maintenance shape: the five new operators
-              (winnowing ×2, vocab coverage, content-defined chunking
-              ×2), the two changed plans
-              (multimodal_frame_sample real-AVI rewrite, kmv_set_overlap
-              m_full rule), sentinels, then the r3/r4-cohort rotation.
-              50/50 green.
-      r10 — chunk_dedup_ledger first (new), the four winnow/cdchunk
-              queries whose plan+oracle changed (segment-local winnowing
-              positions; FastCDC chunk bounds), sentinels, then the full
-              r5 cohort (the oldest rows after r9's rotation).
-      r11 — the 11 round-11 operators first, the two reorder-tolerant
-              streaming rewrites' batch twins, then the full r5-stale
-              parity cohort. 49/50 (time_series_cv_folds decimal-export
-              fail — fixed r12 with a registry-wide no-Decimal guard).
-      r12 (now) — tscv re-green + copurchase_triangles (the rank-vs-id
-              wedge-orientation fix — CHANGED both legs) lead, then the
-              ~30 new r12 operators, then the r6-stale rotation cohort.
+    A module registers by living under one of ``QUERY_PACKAGES``; import
+    order is irrelevant because no name is registered twice.
     """
-    # --- NEW in round 6: first driver rows this round (positions 1-8) ---
-    from .operators import tpch2  # noqa: F401  promo_revenue_share, min_cost_supplier, customer_reach
-    from .operators import drift  # noqa: F401  value_drift
-    from .dedup import containment  # noqa: F401  containment_pairs
-    from .dedup import editdist  # noqa: F401  edit_distance_pairs
-    from .similarity import dimstats  # noqa: F401  embedding_dim_stats
-    from .text import lexical  # noqa: F401  lexical_stats
-
-    # --- round-5 leaf modules, never driver-checked (18 queries) ---
-    from .operators import timetravel  # noqa: F401  state_asof
-    from .text import budget  # noqa: F401  token_quota_by_source
-    from .operators import skew  # noqa: F401  key_skew_report
-    from .operators import quality_report  # noqa: F401  data_quality_report
-    from .operators import privacy  # noqa: F401  k_anonymity_report
-    from .operators import winsorize  # noqa: F401  winsorize_values
-    from .operators import tpch  # noqa: F401  shipping_priority, local_supplier_volume, returned_item_report
-    from .text import shuffle  # noqa: F401  training_shuffle
-    from .operators import histogram  # noqa: F401  value_histogram
-    from .text import weights  # noqa: F401  dedup_survivor_weights, stratified_kfold
-    from .operators import timeseries  # noqa: F401  ts_similarity_topk
-    from .operators import delays  # noqa: F401  time_to_convert, fulfillment_lag
-    from .operators import sketches  # noqa: F401  kmv_distinct_by_type, countmin_sketch
-
-    # --- round-5 chained modules (their registering imports re-green) ---
-    from .multimodal import phash  # noqa: F401  image_phash_dedup (+binaryops ×4; plan changed r6)
-    from .dedup import semantic_imi  # noqa: F401  semantic_dedup_imi (+semantic ×2; oracle floor-fixed r6)
-    from .dedup import ledger  # noqa: F401  dedup_ledger (+ngram, minhash ×3)
-    from .similarity import ivfpq  # noqa: F401  ann_ivfpq_topk (+ann ×2, ivf, pq ×2)
-    from .operators import pagerank  # noqa: F401  copurchase_pagerank (+basket ×2)
-
-    # --- changed this round: service_health explode rewrite (closes window) ---
-    from .operators import monitoring  # noqa: F401  pipeline_health, service_health
-
-    # --- NEW in round 8: first driver rows this round ---
-    from .operators import windowfunnel  # noqa: F401  window_funnel_levels
-    from .operators import heavyhitters  # noqa: F401  heavy_hitters_cms
-    from .operators import decay  # noqa: F401  half_life_popularity
-
-    # --- CHANGED in round 9: real MJPEG-in-AVI container parse ---
-    from .multimodal import aviops  # noqa: F401  multimodal_frame_sample (real container bytes)
-
-    # --- NEW in round 10 ---
-    from .similarity import abtt  # noqa: F401  embedding_top_direction, embedding_isotropy_report
-    from .operators import zorder  # noqa: F401  zorder_file_skipping — Morton-layout skipping report
-    from .operators import bootstrap  # noqa: F401  bootstrap_revenue_means — Poisson bootstrap replicates
-    from .text import quantalign  # noqa: F401  source_quantile_align — cross-source quantile mapping
-    from .similarity import matryoshka  # noqa: F401  embedding_truncation_recall — truncated-width recall@K
-    from .operators import erasure  # noqa: F401  erasure_cascade_audit — right-to-be-forgotten pre-flight
-    # (postings_compression_plan registers via the postings import below)
-    from .text import neyman  # noqa: F401  neyman_allocation_plan — variance-optimal stratified sizing
-    from .text import leakage  # noqa: F401  split_leakage_report — near-dups straddling the split
-    # (l_diversity_report registers via the privacy import above;
-    #  rank_overlap_rbo via the fusion import above)
-    from .operators import fdaudit  # noqa: F401  functional_dependency_audit — declared-FD profiling
-    from .similarity import releval  # noqa: F401  retrieval_ndcg_eval — nDCG/precision/RR vs the semantic leg
-    from .text import laws  # noqa: F401  heaps_law_fit, zipf_law_fit — corpus scaling-law diagnostics
-    from .operators import attribution  # noqa: F401  multi_touch_attribution — linear/U-shaped credit
-    from .dedup import threshold_sweep  # noqa: F401  minhash_threshold_sweep — LSH S-curve calibration
-    from .text import langeval  # noqa: F401  lang_id_confusion, lang_id_class_metrics — router eval
-    from .operators import burstiness  # noqa: F401  event_burstiness — inter-arrival dispersion
-    from .operators import layoutadvisor  # noqa: F401  partition_layout_advisor, bloom_sizing_plan
-    from .operators import decompose  # noqa: F401  revenue_decomposition — trend/seasonal/residual
-    from .operators import graphprofile  # noqa: F401  copurchase degree histogram + assortativity
-    # (psi_drift registers via the drift import above)
-
-    # --- NEW in round 9 ---
-    from .text import winnow  # noqa: F401  winnowed_fingerprints, winnow_match_pairs
-    from .text import vocab  # noqa: F401  vocab_coverage
-    from .text import cdchunk  # noqa: F401  content_defined_chunks, chunk_dedup_report
-
-    # --- past the ~50-entry window: green in r1-r5, order not significant ---
-    from . import operators  # noqa: F401
-    from .operators import rangejoin  # noqa: F401
-    from .text import sharding, importance, classifier, compression, normalize  # noqa: F401
-    from .similarity import diversity, outliers  # noqa: F401
-    from .multimodal import audioops  # noqa: F401
-    from .dedup import survivorship  # noqa: F401
-    from .text import funnel_gates  # noqa: F401
-    from .operators import relational, setops  # noqa: F401
-    from .operators import segments, products, orders, cdc  # noqa: F401
-    from .text import bpe  # noqa: F401
-    from .operators import asof, funnel, windows  # noqa: F401
-    from .operators import (  # noqa: F401
-        anomalies,
-        geo,
-        filters,
-        summary,
-        sessions,
-        scd,
-        binning,
-        ranking,
-    )
-    from .dedup import exact, simhash, embedding, components  # noqa: F401
-    from .text import (  # noqa: F401
-        analysis,
-        corpus,
-        sampling,
-        scrub,
-        ngrams,
-        repetition,
-        tfidf,
-        contamination,
-        lengthdist,
-    )
-    from .similarity import centroids  # noqa: F401
-    from .text import composition, decontam, spans, chunking, datacard, postings, lm  # noqa: F401
-    from .similarity import kmeans, quantize  # noqa: F401
-
-    # new in round 6, registered past the window — first driver rows in the
-    # r7 rotation (scripts/registry_audit.py tracks them)
-    from .operators import markov  # noqa: F401  event_transitions
-    from .text import collocations  # noqa: F401  bigram_lift
-    from .text import source_sim  # noqa: F401  source_vocab_overlap
-    from .text import novelty  # noqa: F401  ngram_novelty
-    from .operators import tpch3  # noqa: F401  late_order_priorities, priority_shipping_split, part_supplier_variety, bulk_order_customers, forecast_revenue_change
-    from .operators import cdcdiff  # noqa: F401  state_diff, state_dwell_times
-    from .dedup import lsh_eval  # noqa: F401  lsh_recall_eval
-    from .operators import tpch4  # noqa: F401  small_lot_revenue, bilateral_trade_volume, market_share, customer_order_distribution, sole_blame_suppliers
-    from .text import curation  # noqa: F401  curated_training_set
-    from .multimodal import pngops  # noqa: F401  image_png_roundtrip
-    from .operators import tpch5  # noqa: F401  product_type_profit, important_stock, top_supplier, discounted_revenue, part_promotion_suppliers — completes all 22 TPC-H shapes; r7 rotation
-    from .operators import bloomjoin  # noqa: F401  bloom_pruned_revenue — runtime-bloom-pruned selective join; r7 rotation
-    from .operators import autocorr  # noqa: F401  event_autocorr — integer-exact lag-1 Pearson; r7 rotation
-    from .operators import trend  # noqa: F401  revenue_trend — exact-stat per-group OLS; r7 rotation
-    from .text import calibration  # noqa: F401  quality_calibration — per-source percent-rank; r7 rotation
-    from .operators import mad  # noqa: F401  robust_anomalies — median/MAD modified z-score; r7 rotation
-    from .text import phrase  # noqa: F401  phrase_search — positional-postings intersection; r7 rotation
-    from .text import mixplan  # noqa: F401  source_mix_plan — mixture keep-rate planning; r7 rotation
-    from .multimodal import jpegops  # noqa: F401  image_jpeg_roundtrip — baseline JPEG codec (new r7)
-    from .text import bm25  # noqa: F401  bm25_topk — rational-IDF BM25 retrieval (new r7)
-    from .operators import triangles  # noqa: F401  copurchase_triangles — degree-ordered wedge closure (new r7)
-    from .streaming import analytics as _streaming_analytics  # noqa: F401  trending_products — windowed top-N batch twin (new r7)
-    from .similarity import fusion  # noqa: F401  hybrid_rrf_search — reciprocal-rank fusion of bm25 + cosine (new r7)
-    from .operators import resample  # noqa: F401  gap_filled_daily_revenue — dense-calendar forward fill (new r7)
-    from .operators import rolling  # noqa: F401  rolling_median_value — per-entity sliding exact median (new r7)
-    from .operators import increment  # noqa: F401  incremental_agg_refresh — partial-merge view maintenance (new r7)
-    from .operators import twap  # noqa: F401  time_weighted_value — exact interval-weighted mean (new r7)
-    from .text import pps_sample  # noqa: F401  pps_token_sample — integer-exact systematic PPS draw (new r7)
-    from .operators import sweepline  # noqa: F401  order_backlog_timeline — sweep-line interval coverage (new r7)
-    from .operators import changepoint  # noqa: F401  revenue_changepoint — exact-integer CUSUM scan (new r7)
-    from .operators import velocity  # noqa: F401  trailing_window_rate — RANGE-frame trailing-hour velocity (new r7)
-    from .operators import tablestats  # noqa: F401  table_stats — single-scan ANALYZE stats + stack unpivot (new r7)
-    from .operators import benford  # noqa: F401  benford_digit_audit — integer-exact first-digit screening (new r7)
-    from .operators import fkaudit  # noqa: F401  fk_integrity_audit — FK-graph orphan detection on grouped keys (new r7)
-    from .operators import pareto  # noqa: F401  pareto_frontier_orders — exact 2-D skyline via suffix-max RANGE windows (new r7)
-    from .operators import wmedian  # noqa: F401  weighted_median_price — exact weighted median on collapsed integer cents (new r7)
-    from .operators import interpolate  # noqa: F401  interpolated_daily_revenue — two-sided linear gap interpolation (new r7)
-    from .operators import chisq  # noqa: F401  chisq_independence — per-cell contingency screen, exact-integer totals (new r7)
-    from .operators import pkaudit  # noqa: F401  pk_uniqueness_audit — per-table key uniqueness on grouped keys (new r7)
-    from .operators import kmvoverlap  # noqa: F401  kmv_set_overlap — merged-KMV audience overlap, deterministic hashes (new r7)
-    from .operators import paths  # noqa: F401  top_event_paths — 3-step journey trigrams via lead() pairs (new r7)
-    from .operators import islands  # noqa: F401  orderkey_islands — rank-difference islands & gaps, no self-join (new r7)
-    from .operators import abtest  # noqa: F401  ab_test_zscores — two-proportion z-test, hash-parity arms (new r7)
-    from .operators import ltv  # noqa: F401  cohort_ltv_curves — cumulative exact-cents cohort LTV (new r7)
-    from .operators import streaks  # noqa: F401  order_status_streaks — two-rank run-length grouping (new r7)
-    from .operators import rfm  # noqa: F401  rfm_scores — total-order ntile quintiles, exact cents (new r7)
-    from .operators import hhi  # noqa: F401  market_concentration_hhi — exact sufficient-statistics HHI (new r7)
-    from .operators import seasonality  # noqa: F401  weekday_seasonality — integer-ratio day-of-week indexes (new r7)
-    from .operators import gini  # noqa: F401  spend_gini — exact rank-weighted Gini from decimal sufficient stats (new r7)
-    from .operators import duporders  # noqa: F401  duplicate_order_pairs — blocked transaction-dedup screen (new r7)
-    from .operators import newreturning  # noqa: F401  new_vs_returning_revenue — monthly acquisition split (new r7)
-
-    # round 11
-    from .text import fertility  # noqa: F401  tokenizer_fertility — per-lang tokens/word + bytes/token (new r11)
-    from .text import ccnet  # noqa: F401  ccnet_lm_buckets — head/middle/tail perplexity terciles per lang (new r11)
-    from .text import epochs  # noqa: F401  epoch_allocation_plan — data-constrained repeat-epoch value ledger (new r11)
-    from .text import wilson  # noqa: F401  wilson_quality_ci — per-source pass rate with Wilson 95% interval (new r11)
-    from .operators import communities  # noqa: F401  label_propagation_communities — K-round min-label LPA (new r11)
-    from .operators import tscv  # noqa: F401  time_series_cv_folds — expanding-window temporal CV splits (new r11)
-    from .operators import blocking  # noqa: F401  blocking_efficiency_report — dedup blocking-key audit (new r11)
-    from .text import divergence  # noqa: F401  source_divergence_report — per-source TV/Bhattacharyya vs corpus (new r11)
-    from .operators import hll  # noqa: F401  hll_distinct_by_type — md5-deterministic HyperLogLog registers + raw estimate (new r11)
-    from .operators import kcore  # noqa: F401  k_core_decomposition — bounded k-core peel ledger over the co-purchase graph (new r11)
-    from .operators import survival  # noqa: F401  repurchase_survival_km — Kaplan-Meier weeks-to-next-order with censoring (new r11)
-
-    # round 12
-    from .dedup import prefixjoin  # noqa: F401  prefix_filter_jaccard_pairs — EXACT similarity join via AllPairs/PPJoin prefix filtering (new r12)
-    from .operators import gkfold  # noqa: F401  group_kfold_assignment — group-aware K-fold CV (no customer spans folds) (new r12)
-    from .operators import rollingdau  # noqa: F401  rolling_distinct_users — trailing-7d exact COUNT DISTINCT via bounded explode (new r12)
-    from .operators import ksdrift  # noqa: F401  ks_drift — exact-on-grid two-sample Kolmogorov-Smirnov per event type (new r12)
-    from .operators import joinest  # noqa: F401  join_size_estimates — CBO join-cardinality estimator scorecard vs exact (new r12)
-    from .text import gopher  # noqa: F401  gopher_rules_report — per-rule Gopher §A1.1 quality-gate pass rates (new r12)
-    from .operators import backtest  # noqa: F401  forecast_backtest_mae — naive/seasonal/MA7 backtest scorecard, integer-cents exact (new r12)
-    from .operators import linkpred  # noqa: F401  link_prediction_jaccard — common-neighbor link prediction, integer-scaled RA (new r12)
-    from .operators import mwu  # noqa: F401  mann_whitney_drift — tie-corrected rank-sum drift test on the cent grid (new r12)
-    from .operators import auc  # noqa: F401  auc_separation_report — exact midrank one-vs-rest AUC, blocked prefix sum (new r12)
-    from .operators import power  # noqa: F401  ab_power_planner — two-proportion sample-size planner over an MDE grid (new r12)
-    from .operators import theilsen  # noqa: F401  theil_sen_trend — median-of-pairwise-slopes robust yearly revenue trend (new r12)
-    from .operators import spearman  # noqa: F401  spearman_corr_matrix — tie-corrected rank correlation from grouped joints (new r12)
-    from .operators import did  # noqa: F401  did_promo_effect — diff-in-differences PROMO revenue effect across the midpoint split (new r12)
-    from .operators import conformal  # noqa: F401  conformal_forecast_intervals — split-conformal 90% band, exact order-statistic quantile (new r12)
-    from .operators import mutualinfo  # noqa: F401  mutual_information_matrix — MI/NMI per categorical pair, explicit-order ln folds (new r12)
-    from .similarity import lof  # noqa: F401  embedding_lof — Local Outlier Factor on a content-addressed sample (new r12)
-    from .operators import cusum  # noqa: F401  cusum_drift — two-sided integer CUSUM chart via the prefix-extremum identity (new r12)
-    from .operators import calipermatch  # noqa: F401  caliper_matched_price_effect — nearest-price matched ATT, sweep-line windows (new r12)
-    from .text import concentration  # noqa: F401  lexical_concentration_report — Simpson/Shannon/head-mass per source (new r12)
-    from .operators import saltplan  # noqa: F401  skew_salt_plan — per-key integer salt factors for hot reducers (new r12)
-    from .operators import shewhart  # noqa: F401  shewhart_imr_chart — I-MR 3-sigma chart, division-free violation test (new r12)
-    from .operators import simpson  # noqa: F401  simpsons_paradox_audit — stratum-vs-pooled association sign reversal (new r12)
-    from .text import prcurve  # noqa: F401  quality_pr_curve — model-gate-vs-rule-gate PR curve over the logit grid (new r12)
-    from .dedup import fellegi  # noqa: F401  fellegi_sunter_weights — per-field m/u linkage weights from labeled pair sets (new r12)
-    from .operators import qreg  # noqa: F401  time_series_quantile_trend — integer pinball-loss grid quantile regression (new r12)
-    from .similarity import jl  # noqa: F401  jl_projection_distortion — signed JL projection distortion over md5 pairs (new r12)
-    from .similarity import silhouette  # noqa: F401  semantic_silhouette — per-cell simplified silhouette of the coarse quantizer (new r12)
-    from .operators import ktruss  # noqa: F401  k_truss_decomposition — bounded edge-support truss peel over the co-purchase graph (new r12)
-    from .operators import bootuplift  # noqa: F401  bootstrap_uplift_ci — Poisson-bootstrap arm-difference distribution (new r12)
+    for pkg in QUERY_PACKAGES:
+        package = importlib.import_module(f"{__package__}.{pkg}")
+        for mod in pkgutil.iter_modules(package.__path__):
+            importlib.import_module(f"{package.__name__}.{mod.name}")
+    # the one registering module outside those packages (trending_products);
+    # the rest of streaming/ is stream plumbing that no query needs
+    from .streaming import analytics  # noqa: F401
 
     # Reorder to the explicit driver window (see WINDOW_PRIORITY). Plain
     # dict re-insertion — idempotent across repeated load_all() calls.

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.materialize import materialize
 from ..registry import register
 from ..similarity.linalg import adaptive_stride_sql, centroids
 from ..similarity.linalg import dot as _dot
@@ -106,12 +107,12 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("top.d").alias("best_dot"),
         )
     )
-    dist = (
+    dist = materialize(
         assign.join(F.broadcast(cent), assign["cell"] == cent["cid"])
         .withColumn("d2", F.col("self_dot") - 2 * F.col("best_dot") + _dot("cemb", "cemb"))
-        .select("vec_id", "cell", "d2")
+        .select("vec_id", "cell", "d2"),
         # feeds the per-cell stats agg AND the final join back
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     folded_d2 = F.aggregate(F.sort_array(F.collect_list("d2")), F.lit(0.0), lambda a, x: a + x)
     folded_d4 = F.aggregate(

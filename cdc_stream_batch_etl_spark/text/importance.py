@@ -19,7 +19,7 @@ ride along as the extreme-token diagnostics.
 
 Plan shape (the DSIR scale story):
   pass 1: one posexplode of the corpus → token table, lazily
-          localCheckpointed once (it feeds raw counts, target counts,
+          materialized once (it feeds raw counts, target counts,
           and the scoring join — lm.py precedent);
   pass 2: two |vocab|-sized groupBys (map-side combine) + three scalar
           aggregates broadcast via 1-row crossJoin (the tfidf.py
@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.materialize import materialize
 from ..functions.parallelism import fan_out
 from ..registry import register
 
@@ -82,10 +83,10 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document target-domain importance: mean smoothed-unigram
     probability ratio p_target/p_raw, plus the extreme token ratios."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = (
+    toks = materialize(
         fan_out(docs)
-        .select("doc_id", "source", F.posexplode(F.split("text", " ")).alias("pos", "w"))
-        .localCheckpoint(eager=False)
+        .select("doc_id", "source", F.posexplode(F.split("text", " ")).alias("pos", "w")),
+        eager=False,
     )
     raw_cnt = toks.groupBy("w").agg(F.count("*").alias("cr"))
     tgt_cnt = (

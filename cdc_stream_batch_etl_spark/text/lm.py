@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.materialize import materialize
 from ..functions.parallelism import fan_out
 from ..registry import register
 
@@ -75,7 +76,7 @@ def doc_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are HOF children (evaluated once per row); a transform(sequence)
     # lambda indexing `words` would re-tokenize per element after
     # CollapseProject inlines the split (quadratic — see ngram_fold_sql)
-    big = (
+    big = materialize(
         fan_out(docs)
         .select("doc_id", F.split("text", " ").alias("words"))
         .select(
@@ -89,11 +90,11 @@ def doc_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bs"),
         )
         .select("doc_id", F.posexplode("bs").alias("pos", "b"))
-        .select("doc_id", "pos", "b.w1", "b.w2")
+        .select("doc_id", "pos", "b.w1", "b.w2"),
         # the bigram table feeds the two model aggregations AND the score
         # join; materialize it once instead of re-exploding the corpus
         # three times (spans.py precedent — lazy, GC-cleaned blocks)
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     cb = big.groupBy("w1", "w2").agg(F.count("*").alias("cb_cnt"))
     cp = big.groupBy("w1").agg(F.count("*").alias("cp_cnt"))

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.materialize import materialize
 from ..functions.parallelism import fan_out
 from ..registry import register
 from ..dedup import hash64_expr, hash64_sql
@@ -138,17 +139,17 @@ def span_dedup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     unioned (count DISTINCT positions), so coverage ∈ [0, 1]."""
     docs = load_table(spark, sf_dir, "documents")
     # the hashed positional-span table feeds BOTH the dup aggregation and
-    # the position join; a lazy localCheckpoint materializes it once at
+    # the position join; a lazy materialize() computes it once at
     # the first action instead of re-hashing the corpus for the second
     # consumer (components.py precedent; blocks are GC-cleaned with the
     # plan). At cluster scale this trades one corpus re-scan for local
     # block storage of (doc_id, pos, h) — 20 B/span, far smaller than the
     # text it derives from.
-    png = (
+    png = materialize(
         _pos_ngrams(docs)
         .withColumn("h", F.expr(hash64_expr("ngram")))
-        .select("doc_id", "n_words", "pos", "h")
-        .localCheckpoint(eager=False)
+        .select("doc_id", "n_words", "pos", "h"),
+        eager=False,
     )
     dup = (
         png.groupBy("h")

@@ -1,8 +1,7 @@
 """Fresh-JVM timing for ONE registered query:
 `python scripts/fresh_jvm_time.py <query> [reps]`.
 
-Generalizes ab_one_arm.py (which is hardwired to clean_corpus): one
-process = one JVM, so the measurement is free of cross-query pollution
+One process = one JVM, so the measurement is free of cross-query pollution
 (checkpoint blocks, GC pressure, codegen cache) — the protocol SCALING.md
 prescribes for adjudicating bench movers.
 """
@@ -13,10 +12,10 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_query
 from cdc_stream_batch_etl_spark import registry
 from cdc_stream_batch_etl_spark.session import get_spark
 
@@ -30,10 +29,7 @@ spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()  # JVM warmup
 
 samples = []
 for rep in range(reps):
-    spark.catalog.clearCache()
-    t0 = time.perf_counter()
-    registry.QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    samples.append(round(time.perf_counter() - t0, 3))
+    samples.append(round(time_query(spark, name, sf_dir), 3))
     print(f"{name} rep={rep} t={samples[-1]}s", flush=True)
 
 print(

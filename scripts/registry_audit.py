@@ -1,17 +1,15 @@
-"""Registry/driver/bench set diff — rotation planning without manual
+"""Registry/driver set diff — rotation planning without manual
 bookkeeping.
 
-Three sets drift apart as the registry grows past the driver's 50-query
+Two sets drift apart as the registry grows past the driver's 50-query
 correctness window:
   1. the registry (every @register'd query),
-  2. cumulative driver CORRECTNESS_r*.json rows (the evidence ledger),
-  3. bench.py's HEADLINE list.
+  2. cumulative driver CORRECTNESS_r*.json rows (the evidence ledger).
 
-This prints, per registered query: which rounds produced a driver row,
+This prints, per registered query: which rounds produced a driver row and
 whether it sits inside the CURRENT first-50 window (i.e. will get a row
-next round), and whether it is benched. The two actionable lists come
-last: queries with NO driver row that are NOT in the current window
-(rotation candidates), and unbenched queries.
+next round). The actionable list comes last: queries with NO driver row
+that are NOT in the current window (rotation candidates).
 
 Run: python scripts/registry_audit.py   (paste the summary into the
 round notes; the driver needs no Spark session — this is pure file
@@ -47,13 +45,8 @@ def main() -> None:
             ):
                 rows[name].append(f"r{int(rnd)}")
 
-    import bench  # noqa: E402  (repo root on sys.path)
-
-    benched = set(bench.HEADLINE)
-
     never = [n for n in names if not rows[n]]
     never_unwindowed = [n for n in never if n not in window]
-    unbenched = [n for n in names if n not in benched]
 
     print(f"registry: {len(names)} queries ({len(registry.ORACLES)} oracled, "
           f"{len(registry.ROWS_ONLY)} rows-only)")
@@ -61,7 +54,6 @@ def main() -> None:
           f"{len(never)} never checked")
     print(f"current window (first {WINDOW}): "
           f"{sum(1 for n in never if n in window)} of the never-checked inside")
-    print(f"bench HEADLINE: {len(benched & set(names))} of {len(names)} benched")
     print()
     if never_unwindowed:
         print("NEVER-CHECKED and OUTSIDE the current window (rotate these):")
@@ -74,10 +66,6 @@ def main() -> None:
     for n in never:
         if n in window:
             print(f"  {n}")
-    print()
-    print(f"unbenched ({len(unbenched)}):")
-    for n in unbenched:
-        print(f"  {n}")
 
 
 if __name__ == "__main__":

@@ -13,13 +13,13 @@ from __future__ import annotations
 
 import shutil
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F
 
+from bench import time_query
 from cdc_stream_batch_etl_spark import registry
 from cdc_stream_batch_etl_spark.session import get_spark
 
@@ -152,13 +152,7 @@ def replicate(spark, n: int, out: str) -> None:
 
 
 def timed(spark, name: str, sf_dir: str) -> float:
-    best = float("inf")
-    for _ in range(2):
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        registry.QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return best
+    return min(time_query(spark, name, sf_dir) for _ in range(2))
 
 
 def _patch_rows(n: int, rows: dict[str, str]) -> None:

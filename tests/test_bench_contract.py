@@ -26,8 +26,7 @@ def test_bench_stdout_last_line_is_the_summary_json(tmp_path):
     ledger = tmp_path / "ledger.json"
     code = (
         "import bench\n"
-        "bench.HEADLINE = ['pricing_summary', 'latest_state']\n"
-        "bench.main()\n"
+        "bench.main(names=['pricing_summary', 'latest_state'])\n"
     )
     proc = subprocess.run(
         [sys.executable, "-c", code],

@@ -318,6 +318,31 @@ def test_no_aggregate_rides_unbounded_following_frames():
     )
 
 
+def test_lineage_breaks_go_through_materialize():
+    """Source-level guard: every query-side lineage break goes through
+    functions/materialize.materialize, so SPARK_GRAFT_MATERIALIZE switches
+    all of them at once. The two streaming sinks are exempt: they run once
+    per trigger, where a persist() would never be unpersisted."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "cdc_stream_batch_etl_spark"
+    allowed = {
+        pkg / "functions" / "materialize.py",
+        pkg / "streaming" / "cdc_stream.py",
+        pkg / "streaming" / "pipeline.py",
+    }
+    offenders = [
+        f"{py.relative_to(pkg)}:{n}"
+        for py in sorted(pkg.rglob("*.py"))
+        if py not in allowed
+        for n, line in enumerate(py.read_text().splitlines(), 1)
+        if ".localCheckpoint(" in line
+    ]
+    assert not offenders, (
+        "bare localCheckpoint bypasses materialize():\n" + "\n".join(offenders)
+    )
+
+
 def test_kmv_sketch_materializes_once(spark, sf_dir):
     """kmv_set_overlap's persisted K·|groups| sketch feeds three
     consumers (per-type estimates, pair side A, pair side B); after

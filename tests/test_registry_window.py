@@ -34,17 +34,3 @@ def test_oracles_subset_of_queries():
     orphans = set(registry.ORACLES) - set(registry.QUERIES)
     assert not orphans, f"oracles without queries: {orphans}"
 
-
-def test_bench_headline_covers_registry():
-    """An official bench run is only 'full' (and only then may write
-    the committed ledger) when HEADLINE >= the registry — a new
-    operator that misses the HEADLINE list silently downgrades the
-    round's official bench to a partial artifact (r12 near-miss:
-    the three new queries were registered but not listed)."""
-    import bench
-
-    registry.load_all()
-    missing = sorted(set(registry.QUERIES) - set(bench.HEADLINE))
-    assert not missing, f"registered queries missing from bench.HEADLINE: {missing}"
-    stale = sorted(set(bench.HEADLINE) - set(registry.QUERIES))
-    assert not stale, f"bench.HEADLINE names no longer registered: {stale}"
