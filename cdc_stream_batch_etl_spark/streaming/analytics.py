@@ -174,19 +174,11 @@ def velocity_alerts_stream(events: DataFrame) -> DataFrame:
     (stream_processor.py:205-212). Emits per finalized window in append
     mode; the watermark bounds state exactly where the reference used a
     300 s Redis TTL."""
-    src = events.withWatermark("ts", WATERMARK) if events.isStreaming else events
     return (
-        src.filter(F.col("event_type") == "purchase")
-        .groupBy(
-            F.get_json_object("props", "$.k").cast("int").alias("product_k"),
-            F.window("ts", "5 minutes").alias("w"),
-        )
-        .agg(F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"))
+        velocity_stream(events)
         .filter(F.col("total_value") > _T.velocity_window_sum)
         .withColumn("alert_type", F.lit("rapid_stock_depletion"))
         .withColumn("severity", alert_severity(F.col("alert_type")))
-        .select("product_k", F.col("w.start").alias("window_start"), "total_value",
-                "alert_type", "severity")
     )
 
 

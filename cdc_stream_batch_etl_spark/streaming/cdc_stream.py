@@ -28,6 +28,18 @@ from pyspark.sql import functions as F
 from .. import schemas
 
 
+def _change_frame(parsed: DataFrame) -> DataFrame:
+    """Flat change frame from a frame whose `e` column is the parsed envelope."""
+    return parsed.select(
+        F.col("e.source.table").alias("table"),
+        F.col("e.op").alias("op"),
+        F.col("e.ts_ms").alias("ts_ms"),
+        F.timestamp_millis(F.col("e.ts_ms")).alias("event_time"),
+        F.col("e.before").alias("before"),
+        F.col("e.after").alias("after"),
+    )
+
+
 def parse_envelope(raw: DataFrame, table: str, row_schema=None) -> DataFrame:
     """S5: Kafka value bytes → typed envelope → flat change frame
     (cdc_processor.py:26-43). `raw` must have a `value` (string/binary)
@@ -42,16 +54,8 @@ def parse_envelope(raw: DataFrame, table: str, row_schema=None) -> DataFrame:
     new-envelope rows coexist — torture-tested in
     tests/test_schema_evolution.py."""
     env = schemas.cdc_envelope(row_schema or schemas.TABLE_SCHEMAS[table])
-    return (
+    return _change_frame(
         raw.select(F.from_json(F.col("value").cast("string"), env).alias("e"))
-        .select(
-            F.col("e.source.table").alias("table"),
-            F.col("e.op").alias("op"),
-            F.col("e.ts_ms").alias("ts_ms"),
-            F.timestamp_millis(F.col("e.ts_ms")).alias("event_time"),
-            F.col("e.before").alias("before"),
-            F.col("e.after").alias("after"),
-        )
     )
 
 
@@ -75,14 +79,7 @@ def split_envelope(raw: DataFrame, table: str) -> tuple[DataFrame, DataFrame]:
         F.from_json(F.col("value").cast("string"), env).alias("e"),
     )
     ok = F.col("e").isNotNull() & F.col("e.op").isNotNull()
-    changes = parsed.filter(ok).select(
-        F.col("e.source.table").alias("table"),
-        F.col("e.op").alias("op"),
-        F.col("e.ts_ms").alias("ts_ms"),
-        F.timestamp_millis(F.col("e.ts_ms")).alias("event_time"),
-        F.col("e.before").alias("before"),
-        F.col("e.after").alias("after"),
-    )
+    changes = _change_frame(parsed.filter(ok))
     dead = parsed.filter(~ok).select(
         F.col("raw_value"),
         F.when(F.col("e").isNull(), F.lit("unparseable_json"))
@@ -97,16 +94,6 @@ def cdc_stats_stream(changes: DataFrame) -> DataFrame:
     cdc:stats:{table}:{op} Redis counters (cdc_processor.py:46-51) as a
     streaming aggregate (state store replaces Redis)."""
     return changes.groupBy("table", "op").agg(F.count("*").alias("event_count"))
-
-
-def revenue_stream(changes: DataFrame) -> DataFrame:
-    """A17: running revenue total over order creates
-    (cdc_processor.py:124-127): metrics:revenue:total as a streaming sum."""
-    return (
-        changes.filter((F.col("table") == "orders") & (F.col("op") == "c"))
-        .select(F.col("after.total_amount").alias("total_amount"))
-        .agg(F.sum(F.col("total_amount").cast("decimal(18,2)")).cast("double").alias("total_revenue"))
-    )
 
 
 # State is hash-partitioned on pk into this many bucket directories; a
@@ -134,15 +121,26 @@ def _merge_latest(state_path: str):
     """foreachBatch body: latest-wins upsert + delete against a parquet
     state table hash-bucketed on pk (W10, cdc_processor.py:72-100).
 
-    Per micro-batch: (1) dedup batch to newest event per pk by
-    (ts_ms, batch monotonic id) — resolves c→u→d sequences inside one
-    batch (SURVEY §7 hard part); (2) read ONLY the bucket partitions the
-    batch touches (partition pruning on the bucket dir), union, keep the
-    newest version per pk; (3) dynamic-partition-overwrite exactly those
-    buckets — untouched bucket files are never rewritten, so per-batch
-    write cost is O(touched state), not O(total state): the parquet
-    equivalent of a keyed MERGE INTO (the reference's Redis SET is O(1)
-    per key; cdc_processor.py:72-100).
+    Per micro-batch, one read, one dedup, one write: tag every batch row
+    with the epoch id (`batch_seq`), its bucket and its arrival order
+    (`seq`); read ONLY the bucket partitions the batch touches (partition
+    pruning on the bucket dir) with `seq` NULL; keep the newest row per pk
+    by (ts_ms, batch_seq, seq nulls last); dynamic-partition-overwrite
+    exactly those buckets. The one ordering covers both merges: batch
+    rows outrank older state on a ts_ms tie because batch_id is above
+    every earlier epoch, c→u→d inside one batch resolves by seq (SURVEY
+    §7 hard part), and a (ts_ms, batch_seq) tie between state and batch
+    only occurs when batch_id is replayed, where the rows are identical.
+    The read needs no lineage break: dynamic overwrite stages task output
+    and replaces the bucket directories at job commit, after every task
+    has read its input.
+
+    Untouched bucket files are never rewritten, so the write is
+    O(touched state) — the parquet equivalent of a keyed MERGE INTO (the
+    reference's Redis SET is O(1) per key). But a batch of k keys misses
+    a given bucket with probability (15/16)^k at 16 buckets, so a trigger
+    of about 50 or more keys touches nearly every bucket and rewrites all
+    of the state (perfbench measures buckets_rewritten_share = 1.0).
 
     Deletes are retained as TOMBSTONES (op='d' rows kept in state, hidden
     by read_latest_state): dropping them would let a late/re-ordered
@@ -151,10 +149,11 @@ def _merge_latest(state_path: str):
     (partition-drop after the watermark horizon), not merge logic.
 
     Durability: each touched bucket's replace is staged-then-committed by
-    the file commit protocol; a crash inside that window can tear ONE
-    bucket, and checkpoint replay of the same batch repairs every bucket
-    deterministically (the merge is idempotent: latest-wins ordered by
-    (ts_ms, batch_seq) gives the same state when batch N re-runs).
+    the file commit protocol, and the merge is idempotent (replaying
+    batch N gives the same state). A crash inside the commit window can
+    tear ONE bucket; that checkpoint replay of the batch then repairs
+    every bucket follows from the idempotence but is untested until a
+    fault-injection test exists.
     Cross-bucket atomicity under arbitrary crashes needs a transactional
     table format — swap the writer for Delta/Iceberg MERGE INTO at
     deployment; the merge semantics here are unchanged by that swap.
@@ -164,42 +163,39 @@ def _merge_latest(state_path: str):
         from pyspark.sql import Window
 
         spark = batch.sparkSession
-        w = Window.partitionBy("pk").orderBy(F.desc("ts_ms"), F.desc("seq"))
-        latest_in_batch = (
-            batch.withColumn("seq", F.monotonically_increasing_id())
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("pk", "op", "ts_ms", "payload_json")
-            # epoch id persists into state so cross-batch ts_ms ties break
-            # deterministically toward the later arrival (the reference's
-            # last-write-wins Redis SET); within-batch ties already broke
-            # by seq above
-            .withColumn("batch_seq", F.lit(batch_id).cast("long"))
-            .withColumn("bucket", _bucket_of(F.col("pk")))
+        incoming = batch.select(
+            "pk",
+            "op",
+            "ts_ms",
+            "payload_json",
+            F.lit(batch_id).cast("long").alias("batch_seq"),
+            _bucket_of(F.col("pk")),
+            F.monotonically_increasing_id().alias("seq"),
         )
-        touched = [
-            r["bucket"] for r in latest_in_batch.select("bucket").distinct().collect()
-        ]
+        touched = [r["bucket"] for r in incoming.select("bucket").distinct().collect()]
         if not touched:
             return  # empty batch: nothing to merge, nothing to rewrite
+        merged_src = incoming
         if _state_exists(spark, state_path):
             # partition pruning: only the touched bucket dirs are read
-            current = spark.read.parquet(state_path).filter(F.col("bucket").isin(touched))
-            merged_src = current.unionByName(latest_in_batch)
-        else:  # first batch: no state yet
-            merged_src = latest_in_batch
-        w2 = Window.partitionBy("pk").orderBy(F.desc("ts_ms"), F.desc("batch_seq"))
-        new_state = (
-            merged_src.withColumn("rn", F.row_number().over(w2))
+            current = (
+                spark.read.parquet(state_path)
+                .filter(F.col("bucket").isin(touched))
+                .withColumn("seq", F.lit(None).cast("long"))
+            )
+            merged_src = current.unionByName(incoming)
+        w = Window.partitionBy("pk").orderBy(
+            F.desc("ts_ms"), F.desc("batch_seq"), F.desc_nulls_last("seq")
+        )
+        (
+            merged_src.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("pk", "op", "ts_ms", "payload_json", "batch_seq", "bucket")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(state_path)
         )
-        # break lineage from the files about to be replaced (distributed
-        # materialization — no driver-side collect), then replace ONLY the
-        # bucket partitions present in new_state
-        new_state.localCheckpoint(eager=True).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("bucket").parquet(state_path)
 
     return apply
 

@@ -50,11 +50,14 @@ def _parquet_sink(df: DataFrame, path: str, checkpoint: str, name: str) -> Strea
 
 
 def _overwrite_sink(df: DataFrame, path: str, checkpoint: str, name: str) -> StreamingQuery:
-    """Complete-mode aggregate → atomically rewritten parquet snapshot
-    (the `:latest` key family: each micro-batch replaces the snapshot)."""
+    """Complete-mode aggregate → parquet snapshot overwritten per
+    micro-batch (the `:latest` key family). Overwrite deletes the old
+    files before the new ones are committed, so a reader between the two
+    sees no snapshot. The batch reads the state store, not `path`, so
+    the write needs no lineage break."""
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        batch.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+        batch.write.mode("overwrite").parquet(path)
 
     return (
         df.writeStream.outputMode("complete")

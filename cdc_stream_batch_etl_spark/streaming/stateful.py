@@ -24,9 +24,6 @@ NOT used here because its driver worker requires ``google.protobuf``,
 which this environment does not ship (verified r10, re-verified r11:
 StateMessage_pb2 imports google.protobuf). The applyInPandasWithState
 form is feature-complete for every state shape the engine needs.
-Migration evaluated side-by-side in quantile_tws.py (r11): one shape
-implemented under BOTH APIs with shared fold/read-out logic and a
-parity test gated on the protobuf blocker — decision: keep.
 """
 
 from __future__ import annotations

@@ -58,18 +58,27 @@ def test_merge_matches_reference_semantics(merge_env, events, n_batches):
     # split the arrival sequence into contiguous micro-batches
     per = max(1, -(-len(events) // n_batches))
     chunks = [events[i : i + per] for i in range(0, len(events), per)]
-    for bid, chunk in enumerate(chunks):
+
+    def batch_of(chunk):
         rows = [
             (k, op, ts, json.dumps({"id": k, "op_seen": op, "ts": ts}))
             for (k, op, ts) in chunk
         ]
-        batch = spark.createDataFrame(
+        return spark.createDataFrame(
             rows, "pk long, op string, ts_ms long, payload_json string"
         )
-        apply(batch, bid)
 
-    got = {
-        r.pk: (r.ts_ms, r.op)
-        for r in spark.read.parquet(state_path).filter(F.col("op") != "d").collect()
-    }
-    assert got == _expected(events)
+    def live_state():
+        return {
+            r.pk: (r.ts_ms, r.op)
+            for r in spark.read.parquet(state_path).filter(F.col("op") != "d").collect()
+        }
+
+    for bid, chunk in enumerate(chunks):
+        apply(batch_of(chunk), bid)
+    assert live_state() == _expected(events)
+
+    # checkpoint replay: the last batch re-runs under the same batch id, so
+    # its rows tie the state rows it wrote on (ts_ms, batch_seq)
+    apply(batch_of(chunks[-1]), len(chunks) - 1)
+    assert live_state() == _expected(events)

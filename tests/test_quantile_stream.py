@@ -115,55 +115,3 @@ def test_readout_rule_degenerate_states():
     n, p50b, _, p95b, _, p99b, _ = _readout(two)
     assert (n, p50b, p95b, p99b) == (20, 0, 1, 1)
 
-
-def test_tws_twin_parity(spark, sf_dir, tmp_path):
-    """The transformWithStateInPandas twin (streaming/quantile_tws.py)
-    under the SAME parity contract as quantile_stream. The TWS Python
-    worker needs google.protobuf for its driver<->worker handshake; this
-    environment does not ship it, so the test gates on that precise
-    blocker and runs in full the moment it lifts (keep/migrate decision
-    documented in quantile_tws.py's docstring)."""
-    import pytest
-
-    from cdc_stream_batch_etl_spark.streaming.quantile_tws import (
-        quantile_stream_tws,
-        tws_available,
-    )
-
-    ok, reason = tws_available()
-    if not ok:
-        # the gate must be honest: the blocker is the protobuf handshake
-        # module, not the API surface (which imports fine)
-        import pyspark.sql.streaming.stateful_processor  # noqa: F401
-
-        assert "protobuf" in reason or "google" in reason, reason
-        pytest.skip(reason)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    src = tmp_path / "src"
-    src.mkdir()
-    out = str(tmp_path / "out")
-    n = ev.count()
-    ev.orderBy(F.desc("value")).limit(n // 4).coalesce(1).write.parquet(str(src / "b0"))
-    ev.orderBy(F.desc("value")).offset(n // 4).coalesce(1).write.parquet(str(src / "b1"))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/b*")
-    )
-    q = (
-        quantile_stream_tws(stream)
-        .writeStream.foreachBatch(
-            lambda bdf, bid: bdf.withColumn("bid", F.lit(bid))
-            .write.mode("append")
-            .parquet(out)
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    assert _final_rows(spark, out) == _batch_rows(spark, sf_dir)
