@@ -48,7 +48,9 @@ class Thresholds:
     # sf0.01 (p99=5, max=7), so the bulk window is 5 min with threshold >5
     bulk_events_per_window: int = 5
     # stream_processor.py:38,207 `>50 units / 5 min` — per-product purchase
-    # sums land ~170 median / 960 max per 7-day window at sf0.01
+    # sums land ~170 median / 960 max per 7-day window at sf0.01, so W8
+    # (operators/anomalies.velocity_alerts_of, batch and stream alike)
+    # sums 7-day windows, not W4's 5-minute ones
     velocity_window_sum: float = 400.0
     # stream_processor.py:283-287: one state > 80% of >= 6 customers —
     # 25 nations make 80% dominance vanishingly rare (daily dominance peaks

@@ -44,8 +44,6 @@ from ..registry import register
 
 N_BUCKETS = 16
 
-_FIELDS = ("lang", "source", "len_bucket", "tok_bucket")
-
 _H60 = "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)"
 
 _FS_ORACLE = f"""

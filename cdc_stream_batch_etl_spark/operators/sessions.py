@@ -1,4 +1,4 @@
-"""Sessionization — gap-based user sessions over the event stream.
+"""Sessionization — gap-based user sessions, batch and stream.
 
 Beyond-reference operator. The reference's nearest construct is the
 per-customer daily-activity read-modify-write (stream_processor.py:111-125,
@@ -11,9 +11,19 @@ Spark-first implementation: the native ``session_window`` grouping column
 — Catalyst's built-in session aggregation (one hash shuffle on user_id,
 windows merged inside the aggregate, whole-stage codegen'd). No lag/
 running-sum two-window dance, no second shuffle: ``groupBy(user_id,
-session_window(ts, gap))`` is the entire plan, and the identical call
-works under Structured Streaming with a watermark (streaming/analytics.py
-covers the windowed-agg family).
+session_window(ts, gap))`` is the entire plan.
+
+This module owns the one sessions builder, `user_sessions_of`, a
+function of an events DataFrame (see operators/windows.py): the
+registered query applies it to the events table, and on an events
+stream the same call runs under the watermark. Session windows are the
+one windowed aggregation whose state MERGES windows (two open sessions
+fuse when a bridging event arrives); append mode emits a session once
+the watermark passes session_end + gap. Events older than the watermark
+do not merge into existing sessions, so the watermark must exceed the
+source's real out-of-orderness — replays of unordered files pass a
+wider one. Per-key state is the set of open sessions, bounded by
+activity rate × gap.
 
 Oracle: the classic gaps-and-islands SQL (lag → boundary flag → running
 sum → group), an independent spelling of the same semantics. Boundary
@@ -39,6 +49,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.money import dsum
 from ..registry import register
+from .windows import WATERMARK
 
 GAP = "4 hours"
 _GAP_US = 4 * 3600 * 1_000_000
@@ -68,11 +79,10 @@ GROUP BY user_id, session_idx
 """
 
 
-@register("user_sessions", oracle=_SESSIONS_ORACLE)
-def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
+def user_sessions_of(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
     return (
-        ev.groupBy(F.session_window(F.col("ts"), GAP).alias("sw"), F.col("user_id"))
+        events.withWatermark("ts", watermark)
+        .groupBy(F.session_window(F.col("ts"), GAP).alias("sw"), F.col("user_id"))
         .agg(
             F.min("ts").alias("session_start"),
             F.max("ts").alias("session_end"),
@@ -90,3 +100,8 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("duration_us"),
         )
     )
+
+
+@register("user_sessions", oracle=_SESSIONS_ORACLE)
+def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return user_sessions_of(load_table(spark, sf_dir, "events"))

@@ -1,12 +1,20 @@
-"""Event-time windowed analytics, batch form.
+"""Event-time windowed analytics: W1 and W4, batch and stream.
 
 The reference keeps bounded deques and TTL'd Redis keys and computes
 processing-time windows on trigger (/root/reference/python/
 stream_processor.py:216-253,196-204,147-179). Per SURVEY §2.9 W11 the
 engine defines event-time tumbling windows over `ts` as the spec (a
 documented deviation-by-design: the reference stamps arrival time,
-stream_processor.py:56). The same groupBy(window(...)) code runs under
-Structured Streaming with watermarks in `streaming/analytics.py`.
+stream_processor.py:56).
+
+This module owns the W1 (`minute_metrics_of`) and W4
+(`product_velocity_of`) builders and the `WATERMARK` every windowed
+family shares. A builder is a function of an events DataFrame: the
+registered query applies it to the events table, and
+`streaming/pipeline.start_pipelines` applies it to the events stream.
+`withWatermark` is a no-op on a batch frame (Spark drops it from the plan);
+on a stream it bounds window state and seals windows for append mode
+(SURVEY §2.9 W3: the watermark replaces both deque maxlen and Redis TTL).
 
 Oracle note: DuckDB has no `window()`; tumbling buckets are spelled
 `make_timestamp(floor(epoch(ts)/W)*W * 1e6)` — identical to Spark's
@@ -27,6 +35,10 @@ from ..catalog import load_table
 from ..functions.money import davg, dsum
 from ..registry import register
 
+#: event-time delay every windowed family tolerates (W1, W4, W7-W9,
+#: sessions and trending_products)
+WATERMARK = "10 minutes"
+
 
 def _bucket_sql(seconds: int) -> str:
     return f"make_timestamp(CAST(floor(epoch(ts)/{seconds})*{seconds}*1000000 AS BIGINT))"
@@ -43,14 +55,13 @@ GROUP BY 1
 """
 
 
-@register("minute_metrics", oracle=_MINUTE_ORACLE)
-def minute_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+def minute_metrics_of(events: DataFrame) -> DataFrame:
     """W1: per-minute purchase count / revenue / avg (the reference's
     compute_real_time_metrics over its 1-min buffer, stream_processor.py:
     216-253), as event-time tumbling windows."""
-    events = load_table(spark, sf_dir, "events")
     return (
-        events.filter(F.col("event_type") == "purchase")
+        events.withWatermark("ts", WATERMARK)
+        .filter(F.col("event_type") == "purchase")
         .groupBy(F.window("ts", "1 minute").alias("w"))
         .agg(
             F.count("*").alias("event_count"),
@@ -59,6 +70,11 @@ def minute_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("window_start"), "event_count", "total_value", "avg_value")
     )
+
+
+@register("minute_metrics", oracle=_MINUTE_ORACLE)
+def minute_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return minute_metrics_of(load_table(spark, sf_dir, "events"))
 
 
 _VELOCITY_ORACLE = f"""
@@ -72,14 +88,13 @@ GROUP BY 1, 2
 """
 
 
-@register("product_velocity", oracle=_VELOCITY_ORACLE)
-def product_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
+def product_velocity_of(events: DataFrame) -> DataFrame:
     """W4: 5-minute per-product sales velocity (stream_processor.py:196-204;
     the Redis `realtime:product:{id}:velocity` key with TTL 300s becomes a
     (product, 5-min window) aggregate; product id = props.k)."""
-    events = load_table(spark, sf_dir, "events")
     return (
-        events.filter(F.col("event_type") == "purchase")
+        events.withWatermark("ts", WATERMARK)
+        .filter(F.col("event_type") == "purchase")
         .groupBy(
             F.get_json_object("props", "$.k").cast("int").alias("product_k"),
             F.window("ts", "5 minutes").alias("w"),
@@ -87,6 +102,11 @@ def product_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("purchase_count"), dsum("value").alias("total_value"))
         .select("product_k", F.col("w.start").alias("window_start"), "purchase_count", "total_value")
     )
+
+
+@register("product_velocity", oracle=_VELOCITY_ORACLE)
+def product_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return product_velocity_of(load_table(spark, sf_dir, "events"))
 
 
 _DAILY_ORACLE = """

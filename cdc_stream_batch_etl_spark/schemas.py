@@ -95,27 +95,3 @@ def cdc_envelope(row_schema: T.StructType) -> T.StructType:
             T.StructField("after", row_schema),
         ]
     )
-
-
-# Generic flattened change event used by the streaming operators when a
-# single stream carries all tables (S3 multi-topic union): the row payload
-# is kept as JSON text and re-parsed per table branch.
-CHANGE_EVENT = T.StructType(
-    [
-        T.StructField("table", T.StringType(), False),
-        T.StructField("op", T.StringType(), False),
-        T.StructField("ts_ms", T.LongType(), False),
-        T.StructField("pk", T.LongType(), False),
-        T.StructField("before_json", T.StringType()),
-        T.StructField("after_json", T.StringType()),
-    ]
-)
-
-ALERT = T.StructType(
-    [
-        T.StructField("type", T.StringType(), False),
-        T.StructField("severity", T.StringType(), False),
-        T.StructField("timestamp", T.TimestampType(), False),
-        T.StructField("data", T.StringType()),  # JSON payload
-    ]
-)

@@ -38,8 +38,6 @@ def get_spark(
     )
     driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
 
-    state_store = os.environ.get("SPARK_GRAFT_STATE_STORE", "hdfs").lower()
-
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
@@ -53,13 +51,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    if state_store == "rocksdb":
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-        ).config(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -86,8 +77,7 @@ def use_rocksdb_state_store(spark: SparkSession, enabled: bool = True) -> None:
     Changelog checkpointing is enabled with RocksDB: per-batch uploads
     become the key delta instead of full SST snapshots, which is the
     difference between O(changed keys) and O(store size) commit cost on
-    large stores. Env default: SPARK_GRAFT_STATE_STORE=rocksdb makes
-    get_spark sessions start with it on."""
+    large stores."""
     if enabled:
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
         spark.conf.set(

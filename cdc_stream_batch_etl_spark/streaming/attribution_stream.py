@@ -204,9 +204,9 @@ def _update(
 def attribution_stream(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
     """One row per settled touch, emitted once the watermark seals its
     purchase — the streaming form of multi_touch_attribution's core."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
     return (
-        src.select("user_id", "ts", "event_id", "event_type")
+        events.withWatermark("ts", watermark)
+        .select("user_id", "ts", "event_id", "event_type")
         .groupBy("user_id")
         .applyInPandasWithState(
             _update,

@@ -22,7 +22,7 @@ Levels only ever grow, so ``update`` output mode emits a user's row at
 most once per batch it changes in; "latest emission per user" is the
 final answer, asserted equal to the BATCH funnel on the same fixture in
 tests/test_funnel_stream.py (the batch/stream parity contract of
-trending_products and user_sessions_stream), including across a
+trending_products and user_sessions), including across a
 kill-free multi-trigger replay.
 
 Scale: one shuffle on user_id per micro-batch; state = 5 small ints per

@@ -19,7 +19,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .analytics import alerts_stream, minute_metrics_stream, velocity_stream
+from ..operators.anomalies import alerts_stream
+from ..operators.windows import minute_metrics_of, product_velocity_of
 from .cdc_stream import cdc_stats_stream, latest_state_query, parse_envelope
 
 
@@ -82,12 +83,15 @@ def start_pipelines(
     - cdc_stats      running (table, op) counters       [complete snapshot]
     - latest_state   W10 cache maintenance              [foreachBatch merge]
     - minute_metrics W1 windowed purchase metrics       [append]
-    - velocity       W4 per-product 5-min sums          [append]
+    - velocity       W4 per-product 5-min velocity      [append]
     - alerts         W6-W9 union, S6 payload shape      [append]
 
     `raw_cdc` is a `value`-column stream (Kafka or file); `events` is the
     events-shaped stream; `customer`/`nation` are static dims for the
-    stream-static enrichment.
+    stream-static enrichment. Each analytics sink runs the builder of
+    the registered batch query of the same family (minute_metrics,
+    product_velocity, alerts_summary before its roll-up), so a sealed
+    window streams the batch query's row.
     """
     ck = f"{out_dir}/_checkpoints"
     changes = parse_envelope(raw_cdc, cdc_table)
@@ -99,13 +103,13 @@ def start_pipelines(
         changes, cdc_table, f"{out_dir}/latest_state", f"{ck}/latest_state"
     )
     p.queries["minute_metrics"] = _parquet_sink(
-        minute_metrics_stream(events),
+        minute_metrics_of(events),
         f"{out_dir}/minute_metrics",
         f"{ck}/minute_metrics",
         "minute_metrics",
     )
     p.queries["velocity"] = _parquet_sink(
-        velocity_stream(events), f"{out_dir}/velocity", f"{ck}/velocity", "velocity"
+        product_velocity_of(events), f"{out_dir}/velocity", f"{ck}/velocity", "velocity"
     )
     p.queries["alerts"] = _parquet_sink(
         alerts_stream(events, customer, nation),

@@ -33,8 +33,6 @@ both fold in explicit order and export 9-rounded.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -138,9 +136,3 @@ def lexical_concentration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-
-
-#: exported for tests: the information-theoretic sanity bound
-#: H <= ln(n_types) with equality iff uniform.
-def max_entropy_nats(n_types: int) -> float:
-    return math.log(n_types)

@@ -10,7 +10,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from cdc_stream_batch_etl_spark.catalog import load_table
-from cdc_stream_batch_etl_spark.streaming.analytics import alerts_stream
+from cdc_stream_batch_etl_spark.operators.anomalies import alerts_stream
 
 
 def test_alert_union_stream_vs_batch(spark, tmp_path, sf_dir):
@@ -56,14 +56,20 @@ def test_alert_union_stream_vs_batch(spark, tmp_path, sf_dir):
         f"stream produced rows batch did not: {sorted(stream_rows - batch_rows)[:3]}"
     )
     # anything missing must be within the unfinalized trailing horizon:
-    # a window is sealed once watermark (max_ts - 10 min) passes its end;
-    # longest window is 1 day, so starts older than max_ts - 10min - 1day
-    # must have emitted
+    # a window is sealed once watermark (max_ts - 10 min) passes its end,
+    # so each family's starts older than max_ts - 10 min - its window
+    # width must have emitted (W6 is stateless: width 0)
     import datetime as dt
 
+    horizon = {
+        "high_value_order": dt.timedelta(0),
+        "bulk_orders": dt.timedelta(minutes=5),
+        "rapid_stock_depletion": dt.timedelta(days=7),
+        "geographic_concentration": dt.timedelta(days=1),
+    }
     max_ts = events.agg(F.max("ts")).collect()[0][0]
-    cutoff = (max_ts - dt.timedelta(minutes=10) - dt.timedelta(days=1)).isoformat(sep="T")
-    for _, _, payload in batch_rows - stream_rows:
+    for alert_type, _, payload in batch_rows - stream_rows:
+        cutoff = (max_ts - dt.timedelta(minutes=10) - horizon[alert_type]).isoformat(sep="T")
         d = json.loads(payload)
         start = d.get("window_start") or d.get("ts")
         assert start is not None

@@ -9,10 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from cdc_stream_batch_etl_spark.catalog import load_table
-from cdc_stream_batch_etl_spark.operators.sessions import _GAP_US
-from cdc_stream_batch_etl_spark.streaming.sessions_stream import (
-    user_sessions_stream,
-)
+from cdc_stream_batch_etl_spark.operators.sessions import _GAP_US, user_sessions_of
 
 
 def test_sessions_stream_matches_batch_on_sealed_sessions(
@@ -23,7 +20,7 @@ def test_sessions_stream_matches_batch_on_sealed_sessions(
         r.user_id, r.session_start, r.session_end, r.n_events,
         r.total_value, r.duration_us,
     )
-    batch = {key(r) for r in user_sessions_stream(events).collect()}
+    batch = {key(r) for r in user_sessions_of(events).collect()}
 
     # time-ordered micro-batches, as a real feed would deliver
     src = str(tmp_path / "events_src")
@@ -39,7 +36,7 @@ def test_sessions_stream_matches_batch_on_sealed_sessions(
     )
     ckpt = str(tmp_path / "ckpt")
     q = (
-        user_sessions_stream(stream_src)
+        user_sessions_of(stream_src)
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("sessions_out")

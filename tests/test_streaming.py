@@ -11,8 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from cdc_stream_batch_etl_spark.catalog import load_table
+from cdc_stream_batch_etl_spark.operators.sessions import user_sessions_of
+from cdc_stream_batch_etl_spark.operators.windows import minute_metrics_of
 from cdc_stream_batch_etl_spark.sources.files import text_stream
-from cdc_stream_batch_etl_spark.streaming.analytics import minute_metrics_stream
 from cdc_stream_batch_etl_spark.streaming.cdc_stream import (
     cdc_stats_stream,
     latest_state_query,
@@ -113,12 +114,11 @@ def test_cdc_stats_stream(spark, cdc_fixture):
 
 
 def test_streaming_sessions_match_batch(spark, tmp_path, sf_dir):
-    """Stream/batch parity for session windows: the same sessions_stream
+    """Stream/batch parity for session windows: the same user_sessions_of
     builder over file micro-batches equals the registered batch
     user_sessions query — including sessions whose events span multiple
     micro-batch files (session-window state merge)."""
     from cdc_stream_batch_etl_spark import registry
-    from cdc_stream_batch_etl_spark.streaming.analytics import sessions_stream
 
     registry.load_all()
     batch_result = {
@@ -134,8 +134,8 @@ def test_streaming_sessions_match_batch(spark, tmp_path, sf_dir):
     )
     q = (
         # replayed files are not time-ordered → watermark wider than the
-        # 30-day event span so no event is "late" (see builder docstring)
-        sessions_stream(stream_src, watermark="40 days")
+        # 30-day event span so no event is "late" (see operators/sessions.py)
+        user_sessions_of(stream_src, watermark="40 days")
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("sess_parity_out")
@@ -161,14 +161,14 @@ def test_streaming_minute_metrics_match_batch(spark, tmp_path, sf_dir):
 
     batch_result = {
         (r.window_start, r.event_count, round(r.total_value, 6))
-        for r in minute_metrics_stream(events).collect()
+        for r in minute_metrics_of(events).collect()
     }
 
     stream_src = (
         spark.readStream.schema(events.schema).option("maxFilesPerTrigger", "1").parquet(src)
     )
     q = (
-        minute_metrics_stream(stream_src)
+        minute_metrics_of(stream_src)
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("mm_out")
