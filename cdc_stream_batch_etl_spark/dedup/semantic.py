@@ -41,8 +41,6 @@ annotated kept/removed), never collected.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,11 +51,10 @@ from ..registry import register
 from ..similarity.linalg import adaptive_stride_sql, centroids
 from ..similarity.linalg import dot as _dot
 
-# Cosine cut for "semantic duplicate". The 0.40 default is tuned to the
-# isotropic synthetic corpus (a real embedding space wants ~0.95 — SemDeDup
-# §4); override per-corpus via env. Read ONCE at import so the Spark plan
-# and the DuckDB oracle (baked into the f-string below) always agree.
-SEM_THRESHOLD = float(os.environ.get("SPARK_GRAFT_SEM_THRESHOLD", "0.40"))
+# Cosine cut for "semantic duplicate". 0.40 is tuned to the isotropic
+# synthetic corpus (a real embedding space wants ~0.95 — SemDeDup §4). The
+# Spark plan and the DuckDB oracle (baked into the f-string below) share it.
+SEM_THRESHOLD = 0.40
 MAX_CELL = 4096  # pair-stage cap per cell; ≫ √N cell sizes, binds only on degenerate skew
 
 _DOT = "list_dot_product({a}, {b})"

@@ -30,17 +30,15 @@ its incident forensics would actually be done.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
 
-#: Diff window [T1, T2]; env-overridable like SPARK_GRAFT_AS_OF.
-DIFF_T1 = os.environ.get("SPARK_GRAFT_DIFF_T1", "2024-01-10 00:00:00")
-DIFF_T2 = os.environ.get("SPARK_GRAFT_DIFF_T2", "2024-01-20 00:00:00")
+#: Diff window [T1, T2].
+DIFF_T1 = "2024-01-10 00:00:00"
+DIFF_T2 = "2024-01-20 00:00:00"
 
 _DIFF_ORACLE = f"""
 WITH agg AS (

@@ -23,17 +23,14 @@ partitions — the filter is the cheapest possible time machine.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
 
-#: Overridable like SPARK_GRAFT_SEM_THRESHOLD (dedup/semantic.py) so a
-#: production caller can pin any cut point without editing code.
-AS_OF = os.environ.get("SPARK_GRAFT_AS_OF", "2024-01-15 00:00:00")
+#: The cut point; the Spark plan and the DuckDB oracle below share it.
+AS_OF = "2024-01-15 00:00:00"
 
 _ASOF_ORACLE = f"""
 WITH cut AS (

@@ -154,16 +154,15 @@ def run_batch_pipeline(
         result.quality_failures = [f"source unavailable: {k}" for k, v in health.items() if not v]
         return result
 
-    for name, fn in BATCH_QUERIES.items():
-        df = fn(spark, sf_dir)
-        df.write.mode("overwrite").parquet(f"{out_dir}/{name}/run_ts={run_ts}")
+    def _publish(name: str, df: DataFrame) -> None:
+        run_path = f"{out_dir}/{name}/run_ts={run_ts}"
+        df.write.mode("overwrite").parquet(run_path)
         # `latest` is a straight copy of the materialized run output — a
         # column-for-column parquet rewrite, NOT a second execution of the
         # query (the reference writes the same payload to both keys too,
         # batch_processor.py:186-191)
-        run_out = spark.read.parquet(f"{out_dir}/{name}/run_ts={run_ts}")
         cnt, fails = _observed_write(
-            name, run_out, f"{out_dir}/{name}/latest"
+            name, spark.read.parquet(run_path), f"{out_dir}/{name}/latest"
         )
         result.row_counts[name] = cnt
         result.quality_failures.extend(fails)
@@ -172,17 +171,11 @@ def run_batch_pipeline(
         # executor storage
         spark.catalog.clearCache()
 
+    for name, fn in BATCH_QUERIES.items():
+        _publish(name, fn(spark, sf_dir))
     for name, (upstream, fn) in DERIVED_QUERIES.items():
         src = spark.read.parquet(f"{out_dir}/{upstream}/latest")
-        df = fn(spark, sf_dir, source_df=src)
-        df.write.mode("overwrite").parquet(f"{out_dir}/{name}/run_ts={run_ts}")
-        cnt, fails = _observed_write(
-            name,
-            spark.read.parquet(f"{out_dir}/{name}/run_ts={run_ts}"),
-            f"{out_dir}/{name}/latest",
-        )
-        result.row_counts[name] = cnt
-        result.quality_failures.extend(fails)
+        _publish(name, fn(spark, sf_dir, source_df=src))
 
     result.quality_passed = not result.quality_failures
     result.duration_sec = round(time.perf_counter() - t0, 3)

@@ -63,6 +63,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.attribution import _LOOKBACK_US
+from .stateful import keyed_state, whole_group
 
 #: default reorder horizon (see transitions_stream.WATERMARK)
 WATERMARK = "1 hour"
@@ -134,9 +135,8 @@ def _update(
     pending = [list(t) for t in zip(pts, peid, ptype)]
     buf = [list(t) for t in zip(bts, beid, bkind, btype)]
 
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    pdf = whole_group(pdfs)
+    if pdf is not None:
         ts_us = pdf["ts"].astype("int64") // 1000
         kind = (pdf["event_type"] == "purchase").astype("int64")
         buf.extend(
@@ -203,16 +203,15 @@ def _update(
 
 def attribution_stream(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
     """One row per settled touch, emitted once the watermark seals its
-    purchase — the streaming form of multi_touch_attribution's core."""
-    return (
-        events.withWatermark("ts", watermark)
-        .select("user_id", "ts", "event_id", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    purchase — the streaming form of multi_touch_attribution's core. A
+    batch frame runs on a cold state whose watermark seals every event."""
+    return keyed_state(
+        events.withWatermark("ts", watermark).select(
+            "user_id", "ts", "event_id", "event_type"
+        ),
+        ["user_id"],
+        _update,
+        OUTPUT_SCHEMA,
+        STATE_SCHEMA,
+        GroupStateTimeout.EventTimeTimeout,
     )

@@ -1,7 +1,6 @@
 """Streaming count-min sketch — additive counter state on the live stream.
 
-Companion to sketches_stream.kmv_stream and the fourth
-``applyInPandasWithState`` operator, completing the state-algebra
+Companion to sketches_stream.kmv_stream, completing the state-algebra
 spectrum the streaming layer demonstrates:
 
   stateful.py   TTL counter        — additive, time-bounded state
@@ -36,11 +35,12 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..dedup import hash64_expr
 from ..operators.sketches import CMS_DEPTH, CMS_WIDTH
+from .stateful import keyed_state
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -68,9 +68,9 @@ def _bump(
 
 def cms_stream(events: DataFrame) -> DataFrame:
     """Running D×W count-min counters over the stream, update-mode rows
-    per touched (depth, bucket). Batch twin: operators/sketches.
-    countmin_sketch (tests assert final-state equality and restart
-    safety)."""
+    per touched (depth, bucket); a batch frame gets the final counters.
+    Batch twin: operators/sketches.countmin_sketch (tests assert
+    final-state equality and restart safety)."""
     src = events.select(
         F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("d"),
         F.col("user_id"),
@@ -81,12 +81,4 @@ def cms_stream(events: DataFrame) -> DataFrame:
             % CMS_WIDTH
         ).cast("bigint").alias("bucket"),
     )
-    if not src.isStreaming:
-        raise ValueError("cms_stream is the streaming path; use countmin_sketch for batch")
-    return src.groupBy("depth", "bucket").applyInPandasWithState(
-        _bump,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(src, ["depth", "bucket"], _bump, OUTPUT_SCHEMA, STATE_SCHEMA)

@@ -1,4 +1,4 @@
-"""Streaming CUSUM control chart — the tenth custom stateful shape.
+"""Streaming CUSUM control chart — a phased custom stateful shape.
 
 operators/cusum.py runs the two-sided CUSUM chart OFFLINE over daily
 revenue via the prefix-extremum identity (recurrence-free, window-
@@ -15,16 +15,16 @@ frozen thereafter: the textbook phase-I/phase-II split, which a batch
 window can't express because the chart state never resets and spans
 every micro-batch since calibration.
 
-Tenth ``applyInPandasWithState`` shape; its distinguishing feature vs
-ewma drift (streaming/drift.py) is a PHASED state machine — the same
-fold first accumulates calibration moments, then switches to chart
-arithmetic with frozen parameters — exercising state whose SEMANTICS
-change mid-stream, not just its values.
+Its distinguishing feature vs ewma drift (streaming/drift.py) is a
+PHASED state machine — the same fold first accumulates calibration
+moments, then switches to chart arithmetic with frozen parameters —
+exercising state whose SEMANTICS change mid-stream, not just its values.
 
 Determinism: groups sort by (ts, event_id) before folding (the drift.py
 replay contract); the fold is plain IEEE double arithmetic, so stream,
-restart-resumed stream, and the cold batch twin produce bit-identical
-state. Alarm counts are cumulative longs.
+restart-resumed stream, and a batch frame (the same handler on a cold
+state, stateful.keyed_state) produce bit-identical state. Alarm counts
+are cumulative longs.
 
 Scale: state is 8 doubles + 3 longs per event_type (low-cardinality by
 design; shard by user_id for per-entity charts). One hash exchange from
@@ -39,7 +39,7 @@ from typing import Any
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -48,6 +48,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .stateful import keyed_state, whole_group
 
 #: calibration length (phase I) and the batch twin's sigma multiples
 CAL_N = 16
@@ -147,44 +149,25 @@ def _chart(
     (event_type,) = key
     st = tuple(state.get) if state.exists else _ZERO
 
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if not chunks:
+    pdf = whole_group(pdfs, ["ts", "event_id"])
+    if pdf is None:
         return
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
     st, alarm = _fold(st, pdf["value"].to_numpy(dtype=np.float64))
     state.update(st)
     yield _emit(event_type, st, alarm)
 
 
-def _chart_batch(key: tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
-    """Batch twin: one cold phased fold over the whole group."""
-    (event_type,) = key
-    pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-    st, alarm = _fold(_ZERO, pdf["value"].to_numpy(dtype=np.float64))
-    return _emit(event_type, st, alarm)
-
-
 def cusum_stateful(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Per-event-type online CUSUM chart over `value`.
 
-    Streaming: update-mode emissions per micro-batch via
-    applyInPandasWithState, state carried forever (the chart IS the
-    history). Batch: the same fold once per group through applyInPandas
-    — identical arithmetic, so stream-final state == batch state."""
+    Streaming: update-mode emissions per micro-batch, state carried
+    forever (the chart IS the history). Batch: the same fold on a cold
+    state — identical arithmetic, so stream-final state == batch state."""
     src = events.select("event_id", "ts", "event_type", "value")
-    if not src.isStreaming:
-        return src.groupBy("event_type").applyInPandas(
-            _chart_batch, OUTPUT_SCHEMA
-        )
-    return (
-        src.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _chart,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_state(
+        src.withWatermark("ts", watermark),
+        ["event_type"],
+        _chart,
+        OUTPUT_SCHEMA,
+        STATE_SCHEMA,
     )

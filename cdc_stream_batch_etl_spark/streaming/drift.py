@@ -1,4 +1,4 @@
-"""Streaming EWMA drift detection — a second custom stateful operator.
+"""Streaming EWMA drift detection — an order-dependent stateful fold.
 
 The reference's anomaly detectors (W6-W9, etl_monitoring/stream alerts)
 are all threshold rules against CURRENT values; a production stream also
@@ -10,18 +10,17 @@ micro-batch's mean escapes the control band (the classic EWMA control
 chart, Roberts 1959; the streaming analog of the reference's z-style
 alert thresholds).
 
-This is the second ``applyInPandasWithState`` operator in the engine
-(streaming/stateful.py is the Redis-TTL-shaped counter). Different state
-shape on purpose: a sequential FOLD (each event updates mean/var before
-the next) rather than a commutative accumulation — the class of logic
-that genuinely cannot be a windowed agg, because the update is
-order-dependent and the state never resets.
+Its state shape differs from the Redis-TTL-shaped counter in
+streaming/stateful.py on purpose: a sequential FOLD (each event updates
+mean/var before the next) rather than a commutative accumulation — the
+class of logic that genuinely cannot be a windowed agg, because the
+update is order-dependent and the state never resets.
 
 Determinism: events are sorted by (ts, event_id) inside each group
 before folding, so replay/restart produce identical state; Arrow chunk
-boundaries are erased by concatenating the full group (stateful.py
-precedent). The same code path runs on a batch DataFrame (single fold,
-no prior state) — the batch twin the tests compare against.
+boundaries are erased by concatenating the full group
+(stateful.whole_group). A batch DataFrame runs the same handler on a
+cold state (stateful.keyed_state): one fold, no prior model.
 
 Scale: state is 4 doubles + 1 long per event_type (dozens of keys — the
 grouping column is low-cardinality by design; for per-user drift the
@@ -37,7 +36,7 @@ from typing import Any
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -46,6 +45,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .stateful import keyed_state, whole_group
 
 ALPHA = 0.125  # EWMA smoothing
 K_SIGMA = 3.0  # control-band width
@@ -90,12 +91,10 @@ def _detect(
     (event_type,) = key
     n, ewma, ewvar = state.get if state.exists else (0, 0.0, 0.0)
 
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if not chunks:
-        return
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
     # event-time order with a total tiebreak — replay-deterministic fold
-    pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+    pdf = whole_group(pdfs, ["ts", "event_id"])
+    if pdf is None:
+        return
     values = pdf["value"].to_numpy(dtype=np.float64)
 
     # drift is judged BEFORE this batch updates the model: does the new
@@ -118,40 +117,18 @@ def _detect(
     )
 
 
-def _detect_batch(key: tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
-    """Batch twin: one cold fold over the whole group (no prior model, so
-    drift is definitionally false — there is no history to escape)."""
-    (event_type,) = key
-    pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-    values = pdf["value"].to_numpy(dtype=np.float64)
-    n, ewma, ewvar = _fold(0, 0.0, 0.0, values)
-    return pd.DataFrame(
-        {
-            "event_type": [event_type],
-            "n_events": [n],
-            "ewma": [ewma],
-            "ewvar": [ewvar],
-            "batch_mean": [float(values.mean())],
-            "drift": [False],
-        }
-    )
-
-
 def value_drift_stateful(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Per-event-type EWMA control chart over `value`.
 
-    Streaming: update-mode emissions per micro-batch via
-    applyInPandasWithState, state carried forever (no TTL — the model IS
-    the history). Batch: Spark forbids applyInPandasWithState outside a
-    stream, so the same fold runs once per group through applyInPandas —
-    identical arithmetic, drift always false (no prior model)."""
+    Streaming: update-mode emissions per micro-batch, state carried
+    forever (no TTL — the model IS the history). Batch: the same fold on
+    a cold state — identical arithmetic, drift always false (no prior
+    model)."""
     src = events.select("event_id", "ts", "event_type", "value")
-    if not src.isStreaming:
-        return src.groupBy("event_type").applyInPandas(_detect_batch, OUTPUT_SCHEMA)
-    return src.withWatermark("ts", watermark).groupBy("event_type").applyInPandasWithState(
+    return keyed_state(
+        src.withWatermark("ts", watermark),
+        ["event_type"],
         _detect,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        OUTPUT_SCHEMA,
+        STATE_SCHEMA,
     )

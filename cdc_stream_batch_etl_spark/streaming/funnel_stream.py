@@ -39,9 +39,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
 from ..operators.windowfunnel import FUNNEL_W_US
+from .stateful import keyed_state, whole_group
 
 #: "no value yet" sentinel for lv/m2 — far enough below any epoch-µs
 #: that (tu - sentinel) can never pass the window test
@@ -73,17 +74,10 @@ def _step(
     lv, m2, l1, l2, l3 = (
         state.get if state.exists else (_NONE, _NONE, 0, 0, 0)
     )
-    # applyInPandasWithState delivers a group's micro-batch as MULTIPLE
-    # Arrow chunks (maxRecordsPerBatch-sized) in arbitrary row order;
-    # sorting each chunk independently would not enforce the documented
-    # (tu, event_id) ordering across chunk boundaries (>10k events in
-    # one micro-batch could replay out of order and miss levels).
-    # Materialize the whole group once, then sort globally.
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(
-            ["tu", "event_id"]
-        )
+    # the documented (tu, event_id) order holds across Arrow chunk
+    # boundaries only if the whole group is sorted at once
+    pdf = whole_group(pdfs, ["tu", "event_id"])
+    if pdf is not None:
         for tu, ty in zip(pdf["tu"], pdf["event_type"]):
             tu = int(tu)
             # flags first (strictly-before semantics), then state update
@@ -104,18 +98,9 @@ def _step(
 
 def funnel_stream(events: DataFrame) -> DataFrame:
     """Per-user funnel level over a stream of events — emits the user's
-    current level on every micro-batch that touches the user."""
-    if not events.isStreaming:
-        raise ValueError(
-            "funnel_stream is the streaming path; use window_funnel_levels for batch"
-        )
+    current level on every micro-batch that touches the user; a batch
+    frame gets each user's final level."""
     src = events.select(
         "user_id", "event_id", F.unix_micros("ts").alias("tu"), "event_type"
     )
-    return src.groupBy("user_id").applyInPandasWithState(
-        _step,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(src, ["user_id"], _step, OUTPUT_SCHEMA, STATE_SCHEMA)

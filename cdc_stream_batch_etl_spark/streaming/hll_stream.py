@@ -1,6 +1,5 @@
 """Streaming HyperLogLog — live per-key cardinality with 512 longs of
-state (the eighth ``applyInPandasWithState`` shape, and the monoid
-twin operators/hll.py promises in its scale note).
+state (the monoid twin operators/hll.py promises in its scale note).
 
 KMV (sketches_stream.py) carries the K smallest hashes; HLL carries
 max-rho per register — also a commutative, idempotent monoid (merge =
@@ -32,7 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -44,6 +43,7 @@ from pyspark.sql.types import (
 
 from ..dedup import hash64_expr
 from ..operators.hll import _POW2_NEG, _W_BITS, ALPHA_M, HLL_M
+from .stateful import keyed_state
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -114,20 +114,10 @@ def _sketch(
 
 
 def hll_stream(events: DataFrame) -> DataFrame:
-    """Running per-event-type HLL over the stream; batch frames belong
-    to operators/hll.hll_distinct_by_type (tests assert final-state
-    register equality)."""
+    """Running per-event-type HLL over the stream. A batch frame folds
+    once on a cold state; its rows equal operators/hll.
+    hll_distinct_by_type (tests assert final-state register equality)."""
     src = events.select(
         "event_type", F.expr(hash64_expr("cast(user_id as string)")).alias("hv")
     )
-    if not src.isStreaming:
-        raise ValueError(
-            "hll_stream is the streaming path; use hll_distinct_by_type for batch"
-        )
-    return src.groupBy("event_type").applyInPandasWithState(
-        _sketch,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(src, ["event_type"], _sketch, OUTPUT_SCHEMA, STATE_SCHEMA)

@@ -31,15 +31,13 @@ WATERMARK = "10 minutes"
 ATTRIBUTION_WINDOW = "10 minutes"
 
 
-def purchase_click_attribution_stream(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    watermark: str = WATERMARK,
-    window: str = ATTRIBUTION_WINDOW,
+def _interval_join(
+    clicks: DataFrame, purchases: DataFrame, watermark: str, window: str, how: str
 ) -> DataFrame:
-    """(click, purchase) pairs where the purchase follows the click by at
-    most `window`, per user. Both sides watermarked; the two-sided range
-    predicate bounds join state from both directions."""
+    """Clicks joined to the same user's purchases at most `window` after
+    them. Both sides watermarked (Spark drops the watermark from a batch
+    plan, so a batch frame runs the plain range join); the two-sided
+    range predicate bounds join state from both directions."""
     c = clicks.withWatermark("ts", watermark).alias("c")
     p = purchases.withWatermark("ts", watermark).alias("p")
     return c.join(
@@ -51,6 +49,7 @@ def purchase_click_attribution_stream(
             AND p.ts <= c.ts + interval {window}
             """
         ),
+        how,
     ).select(
         F.col("c.user_id").alias("user_id"),
         F.col("c.event_id").alias("click_id"),
@@ -59,6 +58,17 @@ def purchase_click_attribution_stream(
         F.col("p.ts").alias("purchase_ts"),
         F.col("p.value").alias("purchase_value"),
     )
+
+
+def purchase_click_attribution_stream(
+    clicks: DataFrame,
+    purchases: DataFrame,
+    watermark: str = WATERMARK,
+    window: str = ATTRIBUTION_WINDOW,
+) -> DataFrame:
+    """(click, purchase) pairs where the purchase follows the click by at
+    most `window`, per user."""
+    return _interval_join(clicks, purchases, watermark, window, "inner")
 
 
 def unconverted_clicks_stream(
@@ -75,46 +85,6 @@ def unconverted_clicks_stream(
     end of the stream whose window the watermark never passes stays
     buffered; feed a final heartbeat event or stop-and-drain to flush —
     the inherent outer-join-on-streams contract, not a bug)."""
-    c = clicks.withWatermark("ts", watermark).alias("c")
-    p = purchases.withWatermark("ts", watermark).alias("p")
-    return c.join(
-        p,
-        F.expr(
-            f"""
-            c.user_id = p.user_id
-            AND p.ts >= c.ts
-            AND p.ts <= c.ts + interval {window}
-            """
-        ),
-        "leftOuter",
-    ).select(
-        F.col("c.user_id").alias("user_id"),
-        F.col("c.event_id").alias("click_id"),
-        F.col("c.ts").alias("click_ts"),
-        F.col("p.event_id").alias("purchase_id"),
-        F.col("p.value").alias("purchase_value"),
-    )
-
-
-def purchase_click_attribution_batch(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
-    """Batch twin on the identical predicate — used by the parity test;
-    at rest this is a plain range join Catalyst plans as a hash join on
-    user_id with a post-filter."""
-    c, p = clicks.alias("c"), purchases.alias("p")
-    return c.join(
-        p,
-        F.expr(
-            f"""
-            c.user_id = p.user_id
-            AND p.ts >= c.ts
-            AND p.ts <= c.ts + interval {ATTRIBUTION_WINDOW}
-            """
-        ),
-    ).select(
-        F.col("c.user_id").alias("user_id"),
-        F.col("c.event_id").alias("click_id"),
-        F.col("c.ts").alias("click_ts"),
-        F.col("p.event_id").alias("purchase_id"),
-        F.col("p.ts").alias("purchase_ts"),
-        F.col("p.value").alias("purchase_value"),
+    return _interval_join(clicks, purchases, watermark, window, "leftOuter").drop(
+        "purchase_ts"
     )

@@ -1,5 +1,5 @@
 """Streaming Misra-Gries heavy hitters — bounded deterministic top-k
-state on the live stream, the ninth ``applyInPandasWithState`` shape.
+state on the live stream.
 
 Where it sits in the state-algebra spectrum the streaming layer
 demonstrates (see cms_stream.py's table): CMS keeps a FIXED grid of
@@ -41,7 +41,7 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     ArrayType,
     LongType,
@@ -49,6 +49,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .stateful import keyed_state, whole_group
 
 MG_K = 8
 
@@ -101,8 +103,7 @@ def _update(
         summary = dict(zip(vals, cnts))
     else:
         summary, n_proc, n_dec = {}, 0, 0
-    batch = pd.concat(list(pdfs), ignore_index=True)
-    batch = batch.sort_values(["tu", "event_id"], kind="mergesort")
+    batch = whole_group(pdfs, ["tu", "event_id"])
     users = [int(u) for u in batch["user_id"]]
     summary, dec = mg_fold(summary, users)
     n_proc += len(users)
@@ -130,20 +131,12 @@ def _update(
 def mg_stream(events: DataFrame) -> DataFrame:
     """Per event_type: the running Misra-Gries summary of user_id
     frequencies (MG_K counters max), update-mode snapshot per touched
-    key per micro-batch. Twin: mg_fold over the identically-ordered
-    replay (tests/test_mg_stream.py)."""
+    key per micro-batch; a batch frame folds once on a cold state. Twin:
+    mg_fold over the identically-ordered replay (tests/test_mg_stream.py)."""
     src = events.select(
         "event_type",
         F.unix_micros(F.col("ts")).alias("tu"),
         F.col("event_id").cast("bigint").alias("event_id"),
         F.col("user_id").cast("bigint").alias("user_id"),
     )
-    if not src.isStreaming:
-        raise ValueError("mg_stream is the streaming path; fold mg_fold for batch")
-    return src.groupBy("event_type").applyInPandasWithState(
-        _update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(src, ["event_type"], _update, OUTPUT_SCHEMA, STATE_SCHEMA)

@@ -5,11 +5,10 @@ operators/drift.py's psi_drift scores era-vs-era drift in batch; the
 production deployment is a MONITOR: the reference profile (yesterday's
 bucket counts, computed by the batch engine) is fixed, the current
 window accumulates live, and the dashboard reads a PSI per trigger.
-This is the sixth applyInPandasWithState shape: per-type state is one
-fixed N_PSI_BINS-long counter array (the quantile_stream footprint),
-the reference is a plain broadcast-by-closure dict, and every
-micro-batch emits (event_type, n_rows, psi, band) under the same
-Laplace-smoothed formula as the batch operator — smoothing over the
+Per-type state is one fixed N_PSI_BINS-long counter array (the
+quantile_stream footprint), the reference is a plain broadcast-by-closure
+dict, and every micro-batch emits (event_type, n_rows, psi, band) under
+the same Laplace-smoothed formula as the batch operator — smoothing over the
 bins live in EITHER side, so a bucket the reference never saw still
 contributes finite mass.
 
@@ -36,7 +35,7 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -47,6 +46,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.drift import BUCKET_WIDTH
+from .stateful import keyed_state
 
 #: fixed state width: buckets floor(value/BUCKET_WIDTH) clamped here
 N_PSI_BINS = 64
@@ -114,13 +114,7 @@ def psi_stream(events: DataFrame, reference: dict[str, list[int]]) -> DataFrame:
     binned = events.filter(F.col("value").isNotNull()).select(
         "event_type", bin_idx.alias("bin")
     )
-    return binned.groupBy("event_type").applyInPandasWithState(
-        _update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(binned, ["event_type"], _update, OUTPUT_SCHEMA, STATE_SCHEMA)
 
 
 def reference_profile(events: DataFrame) -> dict[str, list[int]]:

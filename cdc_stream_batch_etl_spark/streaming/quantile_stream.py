@@ -10,8 +10,7 @@ the sketch's fixed footprint no matter the stream volume — and emits
 the read-out (smallest bin whose cumulative count reaches ceil(p·n),
 upper edge as the estimate) every micro-batch.
 
-State algebra (the streaming layer's fifth applyInPandasWithState
-operator, extending the spectrum documented in cms_stream.py): bin
+State algebra (extending the spectrum documented in cms_stream.py): bin
 counters are commutative but NOT idempotent — like CMS, correctness
 under failure leans on Structured Streaming's checkpointed offset log
 for effective exactly-once, and the kill-restart test asserts the
@@ -42,7 +41,7 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -53,6 +52,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.histogram import BIN_W, N_BINS, QUANTILES, V_LO
+from .stateful import keyed_state
 
 OUTPUT_SCHEMA = StructType(
     [StructField("event_type", StringType()), StructField("n_rows", LongType())]
@@ -114,10 +114,4 @@ def quantile_stream(events: DataFrame) -> DataFrame:
     binned = events.filter(F.col("value").isNotNull()).select(
         "event_type", bin_idx.alias("bin")
     )
-    return binned.groupBy("event_type").applyInPandasWithState(
-        _update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(binned, ["event_type"], _update, OUTPUT_SCHEMA, STATE_SCHEMA)

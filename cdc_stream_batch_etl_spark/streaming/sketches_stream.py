@@ -10,9 +10,8 @@ final state — the strongest parity guarantee any stateful operator here
 offers, and the property the test asserts: the stream's final sketch
 EQUALS the batch operator's, row for row.
 
-Third ``applyInPandasWithState`` operator (after the TTL counter in
-stateful.py and the order-dependent EWMA fold in drift.py — this one is
-order-INDEPENDENT, completing the state-shape spectrum). State per
+Unlike the TTL counter in stateful.py and the order-dependent EWMA
+fold in drift.py, this state is order-INDEPENDENT. State per
 event_type: the sorted K-minimum 60-bit md5 hashes (dedup.hash64 —
 same hash as the batch twin, so their sketches are comparable objects).
 No timeout: a cardinality sketch is cumulative by definition; K bounds
@@ -31,7 +30,7 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -43,6 +42,7 @@ from pyspark.sql.types import (
 
 from ..dedup import hash64_expr
 from ..operators.sketches import HASH_SPACE, KMV_K
+from .stateful import keyed_state
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -93,18 +93,10 @@ def _sketch(
 def kmv_stream(events: DataFrame) -> DataFrame:
     """Running per-event-type KMV cardinality sketch over the stream.
 
-    Batch frames run the same hash + merge through a plain groupBy path
-    (operators/sketches.kmv_distinct_by_type is the canonical batch twin;
-    tests assert final-state equality)."""
+    A batch frame runs the same hash + merge once on a cold state; its
+    rows equal operators/sketches.kmv_distinct_by_type, the canonical
+    batch twin (tests assert final-state equality)."""
     src = events.select(
         "event_type", F.expr(hash64_expr("cast(user_id as string)")).alias("hv")
     )
-    if not src.isStreaming:
-        raise ValueError("kmv_stream is the streaming path; use kmv_distinct_by_type for batch")
-    return src.groupBy("event_type").applyInPandasWithState(
-        _sketch,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(src, ["event_type"], _sketch, OUTPUT_SCHEMA, STATE_SCHEMA)

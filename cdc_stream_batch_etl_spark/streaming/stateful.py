@@ -10,8 +10,16 @@ the key a day after its last activity, exactly like the Redis TTL).
 
 Spark mapping: ``applyInPandasWithState`` with event-time timeout — the
 state store replaces Redis, the watermark drives TTL eviction. Arrow
-batches keep the Python hop vectorized (the only Python-side operator in
-the engine; everything else is JVM codegen).
+batches keep the Python hop vectorized.
+
+This module also owns the streaming layer's one keyed-state path:
+every ``streaming/*`` operator that keeps per-key state hands its
+``handler(key, pdfs, state)`` to ``keyed_state``. On a stream that is
+the update-mode ``applyInPandasWithState`` call; on a batch frame the
+same handler runs once per group through ``applyInPandas`` against a
+cold state (nothing stored before, a watermark past every row), so a
+batch frame gets the answer a stream would give if all of it arrived
+in one micro-batch and every buffered row were sealed.
 
 Scale: state is partitioned by user_id across executors (shuffle on the
 grouping key), size is O(active keys × 32 bytes) — bounded by the
@@ -28,9 +36,10 @@ form is feature-complete for every state shape the engine needs.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -42,6 +51,10 @@ from pyspark.sql.types import (
 )
 
 ACTIVITY_TTL_MS = 24 * 3600 * 1000  # reference's 86400 s Redis TTL
+
+#: the cold state's watermark: the largest whose µs still fit in a long,
+#: so every event of a batch frame is sealed
+_END_OF_INPUT_MS = (2**63 - 1) // 1000
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -63,6 +76,73 @@ STATE_SCHEMA = StructType(
 )
 
 
+class _ColdState:
+    """The ``GroupState`` a batch group sees: no prior state, never timed
+    out, the watermark at end of input; writes are dropped because each
+    batch group is called exactly once."""
+
+    exists = False
+    hasTimedOut = False
+
+    def getCurrentWatermarkMs(self) -> int:
+        return _END_OF_INPUT_MS
+
+    def update(self, value: tuple) -> None:
+        pass
+
+    def remove(self) -> None:
+        pass
+
+    def setTimeoutTimestamp(self, timestamp_ms: int) -> None:
+        pass
+
+
+_COLD = _ColdState()
+
+
+def keyed_state(
+    src: DataFrame,
+    keys: list[str],
+    handler: Callable[..., Iterator[pd.DataFrame]],
+    output_schema: StructType,
+    state_schema: StructType,
+    timeout: str = GroupStateTimeout.NoTimeout,
+) -> DataFrame:
+    """Run ``handler(key, pdfs, state)`` per ``keys`` group: update-mode
+    ``applyInPandasWithState`` on a stream, one cold call per group
+    through ``applyInPandas`` on a batch frame (Spark rejects
+    applyInPandasWithState outside a stream)."""
+    grouped = src.groupBy(*keys)
+    if src.isStreaming:
+        return grouped.applyInPandasWithState(
+            handler,
+            outputStructType=output_schema,
+            stateStructType=state_schema,
+            outputMode="update",
+            timeoutConf=timeout,
+        )
+
+    def cold(key: tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
+        out = list(handler(key, iter([pdf]), _COLD))
+        return pd.concat(out, ignore_index=True) if out else pd.DataFrame()
+
+    return grouped.applyInPandas(cold, output_schema)
+
+
+def whole_group(
+    pdfs: Iterator[pd.DataFrame], order: list[str] | None = None
+) -> pd.DataFrame | None:
+    """A group's micro-batch as one frame, stably sorted by ``order`` when
+    given; None when it has no rows (a pure timeout call). Arrow splits a
+    group into chunks that are not time-ordered, so an order-dependent
+    fold must see the whole group before it sorts."""
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    if not chunks:
+        return None
+    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    return pdf.sort_values(order, kind="mergesort") if order else pdf
+
+
 def _track(
     key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
@@ -81,11 +161,8 @@ def _track(
     # is re-derived here from the FULL batch in event-time order (Arrow
     # may split one group across chunks, and chunks are not time-ordered:
     # a chunk-local check can both miss a reset and reset spuriously).
-    import numpy as np
-
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    pdf = whole_group(pdfs)
+    if pdf is not None:
         ts_all = (pdf["ts"].astype("int64") // 1_000_000).to_numpy()
         order = np.argsort(ts_all, kind="stable")
         ts_sorted = ts_all[order]
@@ -127,48 +204,21 @@ def _track(
     )
 
 
-def _track_batch(key: tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
-    """Batch twin of `_track`: cold single pass (no prior state, no
-    timeout machinery) with the SAME in-batch TTL-gap epoch logic —
-    Spark forbids applyInPandasWithState outside a stream."""
-    import numpy as np
-
-    (user_id,) = key
-    ts_all = (pdf["ts"].astype("int64") // 1_000_000).to_numpy()
-    order = np.argsort(ts_all, kind="stable")
-    ts_sorted = ts_all[order]
-    val_sorted = pdf["value"].to_numpy()[order]
-    reset_pts = np.nonzero(np.diff(ts_sorted) > ACTIVITY_TTL_MS)[0] + 1
-    epoch_start = int(reset_pts[-1]) if reset_pts.size else 0
-    live_vals = val_sorted[epoch_start:]
-    return pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "order_count_today": [len(live_vals)],
-            "total_value_today": [round(float(live_vals.sum()), 2)],
-            "last_order_ts_ms": [int(ts_sorted[-1])],
-            "last_order_amount": [float(val_sorted[-1])],
-        }
-    )
-
-
 def customer_activity_stateful(events: DataFrame, watermark: str = "1 day") -> DataFrame:
     """A21/W3: running per-customer purchase activity with TTL state.
 
     Streaming: update mode, state evicted by event-time timeout. Batch:
-    the same epoch logic in a single cold pass via applyInPandas
-    (applyInPandasWithState is stream-only).
+    the same handler on a cold state — one pass with the same in-batch
+    TTL-gap epochs.
     """
     purchases = events.filter(events["event_type"] == "purchase").select(
         "user_id", "ts", "value"
     )
-    if not purchases.isStreaming:
-        return purchases.groupBy("user_id").applyInPandas(_track_batch, OUTPUT_SCHEMA)
-    purchases = purchases.withWatermark("ts", watermark)
-    return purchases.groupBy("user_id").applyInPandasWithState(
+    return keyed_state(
+        purchases.withWatermark("ts", watermark),
+        ["user_id"],
         _track,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        OUTPUT_SCHEMA,
+        STATE_SCHEMA,
+        GroupStateTimeout.EventTimeTimeout,
     )

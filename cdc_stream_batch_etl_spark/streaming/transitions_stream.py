@@ -59,6 +59,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .stateful import keyed_state, whole_group
+
 #: default reorder horizon: arrivals displaced less than this from
 #: event-time order are handled exactly; later ones are dropped late data
 WATERMARK = "1 hour"
@@ -96,9 +98,8 @@ def _transitions(
     buf = [list(t) for t in zip(bts, beid, btype)]
 
     # merge this batch (empty on a pure timeout invocation)
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    pdf = whole_group(pdfs)
+    if pdf is not None:
         ts_us = pdf["ts"].astype("int64") // 1000
         buf.extend(
             [int(t), int(e), ty]
@@ -146,16 +147,15 @@ def user_transitions_stream(
     events: DataFrame, watermark: str = WATERMARK
 ) -> DataFrame:
     """(user_id, prev_type, next_type, prev_ts_us, next_ts_us) — one row
-    per consecutive event pair, emitted once the watermark seals it."""
-    return (
-        events.withWatermark("ts", watermark)
-        .select("user_id", "ts", "event_id", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _transitions,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    per consecutive event pair, emitted once the watermark seals it. A
+    batch frame runs on a cold state whose watermark seals every event."""
+    return keyed_state(
+        events.withWatermark("ts", watermark).select(
+            "user_id", "ts", "event_id", "event_type"
+        ),
+        ["user_id"],
+        _transitions,
+        OUTPUT_SCHEMA,
+        STATE_SCHEMA,
+        GroupStateTimeout.EventTimeTimeout,
     )

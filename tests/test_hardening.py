@@ -374,41 +374,6 @@ def test_source_overlap_planted(spark, sf_dir, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# SEM_THRESHOLD is env-plumbed (round-4 verdict item 4): the 0.40 default is
-# fixture tuning; a real corpus overrides via SPARK_GRAFT_SEM_THRESHOLD
-# without touching code — and the DuckDB oracle string must follow, since
-# both are baked at import time from the same env read.
-# ---------------------------------------------------------------------------
-
-
-def test_sem_threshold_env_override_reaches_plan_and_oracle():
-    import importlib
-
-    from cdc_stream_batch_etl_spark.dedup import semantic
-
-    saved_oracle = dict(
-        (k, v)
-        for k, v in __import__(
-            "cdc_stream_batch_etl_spark.registry", fromlist=["ORACLES"]
-        ).ORACLES.items()
-        if k.startswith("semantic")
-    )
-    os.environ["SPARK_GRAFT_SEM_THRESHOLD"] = "0.95"
-    try:
-        importlib.reload(semantic)
-        assert semantic.SEM_THRESHOLD == 0.95
-        assert ">= 0.95" in semantic._SEMANTIC_ORACLE
-    finally:
-        del os.environ["SPARK_GRAFT_SEM_THRESHOLD"]
-        importlib.reload(semantic)  # restore the default registration
-        assert semantic.SEM_THRESHOLD == 0.40
-        from cdc_stream_batch_etl_spark import registry
-
-        for k, v in saved_oracle.items():
-            assert registry.ORACLES[k] == v
-
-
-# ---------------------------------------------------------------------------
 # token_quota_by_source boundary semantics: the cumsum is INCLUSIVE, so the
 # document that first crosses the budget is excluded while everything before
 # it stays — and a document bigger than the whole budget can never sneak in.

@@ -339,6 +339,27 @@ def test_lineage_breaks_go_through_materialize():
     )
 
 
+def test_keyed_state_goes_through_one_driver():
+    """Source-level guard: every per-key stateful operator goes through
+    streaming/stateful.keyed_state, so a batch frame runs the same
+    handler on a cold state. stateful.py is the only file allowed to
+    call applyInPandasWithState."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "cdc_stream_batch_etl_spark"
+    allowed = pkg / "streaming" / "stateful.py"
+    offenders = [
+        f"{py.relative_to(pkg)}:{n}"
+        for py in sorted(pkg.rglob("*.py"))
+        if py != allowed
+        for n, line in enumerate(py.read_text().splitlines(), 1)
+        if "applyInPandasWithState(" in line
+    ]
+    assert not offenders, (
+        "applyInPandasWithState bypasses keyed_state():\n" + "\n".join(offenders)
+    )
+
+
 def test_kmv_sketch_materializes_once(spark, sf_dir):
     """kmv_set_overlap's persisted K·|groups| sketch feeds three
     consumers (per-type estimates, pair side A, pair side B); after

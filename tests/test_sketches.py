@@ -184,6 +184,36 @@ def test_kmv_stream_final_state_equals_batch(spark, sf_dir, tmp_path):
         assert s.kmv_estimate == b.kmv_estimate, et
 
 
+def test_sketch_streams_on_a_batch_frame_equal_the_registered_queries(spark):
+    """A batch frame runs the stream handlers once on a cold state, so
+    kmv_stream and hll_stream over the sf0.01 events give the rows of the
+    registered kmv_distinct_by_type and hll_distinct_by_type (sf0.01
+    reaches K distinct users, so the kth-hash branch is exercised)."""
+    import os
+
+    from cdc_stream_batch_etl_spark.operators.hll import hll_distinct_by_type
+    from cdc_stream_batch_etl_spark.streaming.hll_stream import hll_stream
+    from cdc_stream_batch_etl_spark.streaming.sketches_stream import kmv_stream
+    from tests.conftest import SF_DIR
+
+    sf001 = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.01")
+    ev = load_table(spark, sf001, "events")
+
+    kmv_cols = ["event_type", "kth_hash", "kmv_estimate"]
+    got = sorted(kmv_stream(ev).collect())
+    want = sorted(kmv_distinct_by_type(spark, sf001).collect())
+    assert [r["kth_hash"] for r in want if r["kth_hash"] is not None], want
+    assert [[r[c] for c in kmv_cols] for r in got] == [
+        [r[c] for c in kmv_cols] for r in want
+    ]
+    assert [r.n_hashes for r in got] == [min(r.n_distinct_exact, KMV_K) for r in want]
+
+    hll_cols = ["event_type", "registers_used", "empty_registers", "max_rho", "raw_estimate"]
+    got = sorted(hll_stream(ev).select(hll_cols).collect())
+    want = sorted(hll_distinct_by_type(spark, sf001).select(hll_cols).collect())
+    assert got == want
+
+
 def test_histogram_quantile_readout_within_bin_width(spark, sf_dir):
     """Quantiles read from the equi-width histogram must land within one
     bin width of the exact percentiles — the sketch's stated error bound."""

