@@ -60,10 +60,11 @@ def get_spark(
 
 #: Spark's bundled RocksDB state store — the >JVM-heap streaming-state
 #: path. The default HDFS-backed provider keeps every store's working
-#: set on-heap; at 100 TB-scale state (e.g. W10's latest-state cache,
-#: hash-bucketed at 4096 × ~25 GB, streaming/cdc_stream.py) that heap
-#: residency is the bottleneck, while RocksDB keeps state off-heap on
-#: local SSD with the same checkpoint contract.
+#: set on-heap; at 100 TB-scale state (the windowed and keyed-state
+#: operators; W10's latest-state cache is parquet delta runs outside
+#: the state store, streaming/cdc_stream.py) that heap residency is the
+#: bottleneck, while RocksDB keeps state off-heap on local SSD with the
+#: same checkpoint contract.
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )

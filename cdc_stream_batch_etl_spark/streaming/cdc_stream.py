@@ -22,10 +22,11 @@ source — the transformation code below is source-agnostic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import schemas
+from ..catalog import _hadoop
 
 
 def _change_frame(parsed: DataFrame) -> DataFrame:
@@ -50,7 +51,7 @@ def parse_envelope(raw: DataFrame, table: str, row_schema=None) -> DataFrame:
     column, the consumer restarts on the SAME checkpoint with the
     widened schema; from_json reads old envelopes (missing field →
     NULL) and new ones alike, and the downstream latest-state merge is
-    schema-agnostic (payload travels as JSON), so old bucket files and
+    schema-agnostic (payload travels as JSON), so old run files and
     new-envelope rows coexist — torture-tested in
     tests/test_schema_evolution.py."""
     env = schemas.cdc_envelope(row_schema or schemas.TABLE_SCHEMAS[table])
@@ -96,115 +97,149 @@ def cdc_stats_stream(changes: DataFrame) -> DataFrame:
     return changes.groupBy("table", "op").agg(F.count("*").alias("event_count"))
 
 
-# State is hash-partitioned on pk into this many bucket directories; a
-# micro-batch rewrites ONLY the buckets its keys land in. Size so one
-# bucket ≲ executor memory at the target state volume (100 TB state /
-# 4096 buckets ≈ 25 GB; local tests use the small default).
+# perfbench's traced run divides its per-trigger written-partition
+# count by this; that import is its only reader.
 N_STATE_BUCKETS = 16
 
+# A trigger that leaves more delta runs than this folds them into one base.
+# On 4 cores with 1k-row triggers a delta write took ~0.15 s and a
+# compaction 0.5-1.4 s at 10k-100k keys, so at 16 the compaction adds
+# about a third or less to the mean trigger while a read merges at most
+# 17 runs.
+COMPACT_AFTER_RUNS = 16
 
-def _bucket_of(pk_col):
-    return F.pmod(F.hash(pk_col), F.lit(N_STATE_BUCKETS)).alias("bucket")
+_RUN_DIR = "run="
+_STATE_COLUMNS = ("pk", "op", "ts_ms", "payload_json", "batch_seq", "seq")
 
 
-def _state_exists(spark: SparkSession, path: str) -> bool:
-    """Explicit existence probe via the Hadoop FS API — a transient READ
-    error must fail the batch (checkpoint replay retries it), never be
-    mistaken for 'first batch' and wipe accumulated state."""
-    sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    return fs.exists(hpath)
+def newest_wins(rows: DataFrame) -> DataFrame:
+    """The newest row per pk of the raw state rows: highest ts_ms, then
+    the later trigger (batch_seq), then the later arrival inside it
+    (seq; a compacted base row has seq NULL, so a row it was folded
+    from outranks it). The one ordering both read_latest_state and
+    compaction use. Tombstones are kept: the caller hides them above
+    this window, so a `pk =` filter still reaches the parquet scan."""
+    w = Window.partitionBy("pk").orderBy(
+        F.desc("ts_ms"), F.desc("batch_seq"), F.desc_nulls_last("seq")
+    )
+    return rows.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+
+
+def _write_run(rows: DataFrame, state_path: str, run: str) -> None:
+    """Replace exactly the `run=<run>` partition with `rows`."""
+    (
+        rows.select(*_STATE_COLUMNS, F.lit(run).alias("run"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("run")
+        .parquet(state_path)
+    )
+
+
+def _runs(spark: SparkSession, state_path: str) -> list:
+    """Hadoop paths of the run directories under the state root."""
+    _, root, fs = _hadoop(spark, state_path)
+    if not fs.exists(root):
+        return []
+    return [
+        st.getPath()
+        for st in fs.listStatus(root)
+        if st.isDirectory() and st.getPath().getName().startswith(_RUN_DIR)
+    ]
+
+
+def _drop_runs(spark: SparkSession, state_path: str, paths: list) -> None:
+    _, _, fs = _hadoop(spark, state_path)
+    for p in paths:
+        fs.delete(p, True)
+
+
+def _compact(spark: SparkSession, state_path: str, batch_id: int) -> None:
+    """Fold every run into one newest-wins base once there are more
+    than COMPACT_AFTER_RUNS of them. The base goes to `run=c<batch_id>`,
+    a name no delta run uses, and only then are the folded runs deleted.
+    A read failure raises before anything is deleted."""
+    folded = _runs(spark, state_path)
+    if len(folded) <= COMPACT_AFTER_RUNS:
+        return
+    base = f"c{batch_id}"
+    current = newest_wins(spark.read.parquet(state_path))
+    _write_run(current.withColumn("seq", F.lit(None).cast("long")), state_path, base)
+    _drop_runs(spark, state_path, [p for p in folded if p.getName() != _RUN_DIR + base])
 
 
 def _merge_latest(state_path: str):
-    """foreachBatch body: latest-wins upsert + delete against a parquet
-    state table hash-bucketed on pk (W10, cdc_processor.py:72-100).
+    """foreachBatch body: latest-wins upsert + delete for W10
+    (cdc_processor.py:72-100), kept as append-only delta runs of parquet.
 
-    Per micro-batch, one read, one dedup, one write: tag every batch row
-    with the epoch id (`batch_seq`), its bucket and its arrival order
-    (`seq`); read ONLY the bucket partitions the batch touches (partition
-    pruning on the bucket dir) with `seq` NULL; keep the newest row per pk
-    by (ts_ms, batch_seq, seq nulls last); dynamic-partition-overwrite
-    exactly those buckets. The one ordering covers both merges: batch
-    rows outrank older state on a ts_ms tie because batch_id is above
-    every earlier epoch, c→u→d inside one batch resolves by seq (SURVEY
-    §7 hard part), and a (ts_ms, batch_seq) tie between state and batch
-    only occurs when batch_id is replayed, where the rows are identical.
-    The read needs no lineage break: dynamic overwrite stages task output
-    and replaces the bucket directories at job commit, after every task
-    has read its input.
+    Write: each trigger tags its rows with the epoch id (`batch_seq`)
+    and the arrival order inside the batch (`seq`,
+    monotonically_increasing_id) and dynamic-overwrites only its own
+    `run=<batch_id>` partition. It reads no state, collects nothing and
+    shuffles nothing, so its cost is O(batch) where the reference pays
+    one Redis SET per key. A replayed batch rewrites only its own run.
 
-    Untouched bucket files are never rewritten, so the write is
-    O(touched state) — the parquet equivalent of a keyed MERGE INTO (the
-    reference's Redis SET is O(1) per key). But a batch of k keys misses
-    a given bucket with probability (15/16)^k at 16 buckets, so a trigger
-    of about 50 or more keys touches nearly every bucket and rewrites all
-    of the state (perfbench measures buckets_rewritten_share = 1.0).
+    Read: `read_latest_state` keeps the newest row per pk over every
+    run (`newest_wins`: ts_ms, then batch_seq, then seq) and then hides
+    tombstones. c→u→d inside one batch resolves by seq (SURVEY §7 hard
+    part); an equal ts_ms across batches goes to the later batch.
+    batch_seq and seq are data columns, so the order never depends on a
+    directory name.
 
-    Deletes are retained as TOMBSTONES (op='d' rows kept in state, hidden
-    by read_latest_state): dropping them would let a late/re-ordered
-    upsert with an older ts_ms resurrect a deleted key — the W11
-    out-of-order hazard. Tombstone GC maps to retention policy
-    (partition-drop after the watermark horizon), not merge logic.
+    Compaction: once a trigger leaves more than COMPACT_AFTER_RUNS runs,
+    it writes their newest-wins rows (seq NULL) as a base under
+    `run=c<batch_id>` and then deletes the runs it folded. That is
+    O(state) once every few triggers instead of every trigger, the
+    layout of Spark's own HDFS state store (a delta file per version
+    plus a periodic snapshot; Structured Streaming, SIGMOD 2018). A
+    replayed compaction rewrites its own base in place, which needs no
+    lineage break: the dynamic overwrite replaces the directory at job
+    commit, after every task has read its input.
 
-    Durability: each touched bucket's replace is staged-then-committed by
-    the file commit protocol, and the merge is idempotent (replaying
-    batch N gives the same state). A crash inside the commit window can
-    tear ONE bucket; that checkpoint replay of the batch then repairs
-    every bucket follows from the idempotence but is untested until a
-    fault-injection test exists.
-    Cross-bucket atomicity under arbitrary crashes needs a transactional
-    table format — swap the writer for Delta/Iceberg MERGE INTO at
-    deployment; the merge semantics here are unchanged by that swap.
+    Crashes: a run directory appears whole at job commit. A crash after
+    a run write, before the offset commit, replays the batch into the
+    same run name. A crash after the base write and before the deletion
+    leaves the base beside the runs it came from: every base row copies
+    the row it was folded from, which outranks or equals it, so the
+    newest-wins view is the same, and the next compaction folds the
+    leftovers. A base never takes a delta run's name, so a replay can
+    never overwrite it. Every crash point leaves a superset of rows with
+    the same newest-wins view.
+
+    Deletes are retained as TOMBSTONES (op='d' rows, hidden by
+    read_latest_state and kept by compaction): dropping them would let
+    a late upsert with an older ts_ms resurrect a deleted key — the W11
+    out-of-order hazard. Tombstone GC maps to retention policy, not
+    merge logic.
+
+    Why not Spark's state store (an update-mode aggregation keeping the
+    newest row per pk): it would need the arrival tie-break as a column
+    of the stream, but monotonically_increasing_id() is rejected on
+    streaming frames and the file source has no per-row position. Only
+    a Kafka source carries one (`offset`), so the state store fits only
+    there.
     """
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        spark = batch.sparkSession
-        incoming = batch.select(
+        rows = batch.select(
             "pk",
             "op",
             "ts_ms",
             "payload_json",
             F.lit(batch_id).cast("long").alias("batch_seq"),
-            _bucket_of(F.col("pk")),
             F.monotonically_increasing_id().alias("seq"),
         )
-        touched = [r["bucket"] for r in incoming.select("bucket").distinct().collect()]
-        if not touched:
-            return  # empty batch: nothing to merge, nothing to rewrite
-        merged_src = incoming
-        if _state_exists(spark, state_path):
-            # partition pruning: only the touched bucket dirs are read
-            current = (
-                spark.read.parquet(state_path)
-                .filter(F.col("bucket").isin(touched))
-                .withColumn("seq", F.lit(None).cast("long"))
-            )
-            merged_src = current.unionByName(incoming)
-        w = Window.partitionBy("pk").orderBy(
-            F.desc("ts_ms"), F.desc("batch_seq"), F.desc_nulls_last("seq")
-        )
-        (
-            merged_src.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("pk", "op", "ts_ms", "payload_json", "batch_seq", "bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(state_path)
-        )
+        _write_run(rows, state_path, str(batch_id))
+        _compact(batch.sparkSession, state_path, batch_id)
 
     return apply
 
 
 def read_latest_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """The queryable cache view: live rows only (tombstones hidden); the
-    physical bucket column stays internal to the state layout."""
+    """The queryable cache view: the newest row per pk across the runs,
+    live rows only (tombstones hidden above the window)."""
     return (
-        spark.read.parquet(state_path)
+        newest_wins(spark.read.parquet(state_path))
         .filter(F.col("op") != "d")
         .select("pk", "op", "ts_ms", "payload_json", "batch_seq")
     )

@@ -6,13 +6,17 @@ a delete. This is the SURVEY §7 'hard parts' item (c→u→d within a batch,
 late stale updates) explored mechanically instead of by hand-picked cases."""
 
 import json
+import pathlib
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
-from cdc_stream_batch_etl_spark.streaming.cdc_stream import _merge_latest
+from cdc_stream_batch_etl_spark.streaming import cdc_stream
+from cdc_stream_batch_etl_spark.streaming.cdc_stream import (
+    _merge_latest,
+    read_latest_state,
+)
 
 KEYS = [1, 2, 3]
 OPS = ["c", "u", "d", "r"]
@@ -71,14 +75,27 @@ def test_merge_matches_reference_semantics(merge_env, events, n_batches):
     def live_state():
         return {
             r.pk: (r.ts_ms, r.op)
-            for r in spark.read.parquet(state_path).filter(F.col("op") != "d").collect()
+            for r in read_latest_state(spark, state_path).collect()
         }
 
     for bid, chunk in enumerate(chunks):
         apply(batch_of(chunk), bid)
     assert live_state() == _expected(events)
 
-    # checkpoint replay: the last batch re-runs under the same batch id, so
-    # its rows tie the state rows it wrote on (ts_ms, batch_seq)
+    # checkpoint replay: the last batch re-runs under the same batch id and
+    # rewrites its own run
+    apply(batch_of(chunks[-1]), len(chunks) - 1)
+    assert live_state() == _expected(events)
+
+    # forced compaction: every run folds into one newest-wins base, which
+    # must keep the same view — and so must a replay of the last batch
+    # on top of that base
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cdc_stream, "COMPACT_AFTER_RUNS", 0)
+        cdc_stream._compact(spark, state_path, len(chunks) - 1)
+    assert {p.name for p in pathlib.Path(state_path).glob("run=*")} == {
+        f"run=c{len(chunks) - 1}"
+    }
+    assert live_state() == _expected(events)
     apply(batch_of(chunks[-1]), len(chunks) - 1)
     assert live_state() == _expected(events)

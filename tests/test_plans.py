@@ -360,6 +360,24 @@ def test_keyed_state_goes_through_one_driver():
     )
 
 
+def test_no_row_at_a_time_python_udf():
+    """Source-level guard for README scale rule 6: Python runs only
+    inside Arrow-batched pandas UDFs, so no `udf(` / `F.udf(` call and
+    no `@udf` decorator appears in the package (`pandas_udf` is fine)."""
+    import pathlib
+    import re
+
+    row_udf = re.compile(r"(?<![\w.])udf\s*\(|\.udf\s*\(|@(\w+\.)?udf\b")
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "cdc_stream_batch_etl_spark"
+    offenders = [
+        f"{py.relative_to(pkg)}:{n}"
+        for py in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(py.read_text().splitlines(), 1)
+        if row_udf.search(line)
+    ]
+    assert not offenders, "row-at-a-time Python UDF:\n" + "\n".join(offenders)
+
+
 def test_kmv_sketch_materializes_once(spark, sf_dir):
     """kmv_set_overlap's persisted K·|groups| sketch feeds three
     consumers (per-type estimates, pair side A, pair side B); after
