@@ -13,6 +13,22 @@ Scale notes (100 TB):
   on a 1000-executor cluster it should be ~2-3x total cores (set via
   ``SPARK_GRAFT_SHUFFLE_PARTITIONS``).
 - parquet filter pushdown / column pruning are left at their defaults (on).
+
+Streaming checkpoints commit through Spark's FileSystem-based checkpoint
+manager (``CHECKPOINT_FILE_MANAGER``). Every micro-batch commits small
+files: the offset and commit logs, the file-source and file-sink logs,
+and a ``.delta`` plus ``.crc`` per state-store partition. Spark's default
+manager for ``file:`` paths renames through Hadoop's ``FileContext``;
+without Hadoop's native library each such rename resolves the path with
+``RawLocalFileSystem.getFileLinkStatus``, which starts a ``readlink``
+process. The FileSystem manager renames with ``FileSystem.rename``, an
+atomic ``rename(2)`` on the local file system, behind the same
+create-temp-then-rename protocol and the same "fail if the log file
+already exists" check; Spark's checksum wrapper and Hadoop's ``.crc``
+sidecars are unchanged. ``get_spark`` only builds ``local[N]`` sessions,
+so only local checkpoints take this path: a cluster deployment (HDFS or
+an object store) builds its own session and keeps Spark's default
+manager.
 """
 
 from __future__ import annotations
@@ -20,6 +36,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: Local checkpoint commits rename with ``rename(2)`` and start no process.
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def get_spark(
@@ -50,6 +72,7 @@ def get_spark(
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

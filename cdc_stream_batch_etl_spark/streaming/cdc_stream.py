@@ -71,13 +71,17 @@ def split_envelope(raw: DataFrame, table: str) -> tuple[DataFrame, DataFrame]:
     on as the typed change stream.
 
     Returns (changes, dead_letters). Both are streaming DataFrames off
-    ONE parse — Catalyst evaluates from_json once per row and the two
-    filters are complementary predicates on the same projection.
+    ONE parse, and the two filters are complementary predicates on it.
+    The parse is exploded out of a one-element array: Catalyst pushes a
+    filter through a projection by copying the projected expression
+    into it, so a plain select + filter ran from_json three times per
+    row, while a filter on a generator's output stays above it and
+    from_json runs once.
     """
     env = schemas.cdc_envelope(schemas.TABLE_SCHEMAS[table])
+    value = F.col("value").cast("string")
     parsed = raw.select(
-        F.col("value").cast("string").alias("raw_value"),
-        F.from_json(F.col("value").cast("string"), env).alias("e"),
+        value.alias("raw_value"), F.explode(F.array(F.from_json(value, env))).alias("e")
     )
     ok = F.col("e").isNotNull() & F.col("e.op").isNotNull()
     changes = _change_frame(parsed.filter(ok))

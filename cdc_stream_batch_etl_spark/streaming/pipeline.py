@@ -14,6 +14,7 @@ tables, SURVEY §1.3); checkpoints under `<out_dir>/_checkpoints/<name>`.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
@@ -21,16 +22,25 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.anomalies import alerts_stream
 from ..operators.windows import minute_metrics_of, product_velocity_of
-from .cdc_stream import cdc_stats_stream, latest_state_query, parse_envelope
+from .cdc_stream import cdc_stats_stream, latest_state_query, split_envelope
 
 
 @dataclass
 class StreamingPipelines:
     queries: dict[str, StreamingQuery] = field(default_factory=dict)
 
-    def await_all(self, timeout_sec: int = 300) -> None:
+    def await_all(self, timeout_sec: float = 300) -> None:
+        """Wait for every query, all of them within one `timeout_sec`
+        deadline. A query that failed raises its exception, in query
+        order, also once the deadline has passed."""
+        deadline = time.monotonic() + timeout_sec
         for q in self.queries.values():
-            q.awaitTermination(timeout_sec)
+            left = deadline - time.monotonic()
+            # awaitTermination takes whole milliseconds above zero
+            if left >= 1e-3:
+                q.awaitTermination(left)
+            elif q.exception() is not None:
+                raise q.exception()
 
     def stop_all(self) -> None:
         for q in self.queries.values():
@@ -55,7 +65,13 @@ def _overwrite_sink(df: DataFrame, path: str, checkpoint: str, name: str) -> Str
     micro-batch (the `:latest` key family). Overwrite deletes the old
     files before the new ones are committed, so a reader between the two
     sees no snapshot. The batch reads the state store, not `path`, so
-    the write needs no lineage break."""
+    the write needs no lineage break.
+
+    A crash in that gap (tests/test_crash_recovery.py, crash (c)) leaves
+    no snapshot and no commit-log entry for the batch. The restart
+    replays the batch on the state-store version the previous batch
+    committed and writes the same counts an uninterrupted run does, none
+    counted twice; the gap lasts until that replay."""
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         batch.write.mode("overwrite").parquet(path)
@@ -92,9 +108,14 @@ def start_pipelines(
     the registered batch query of the same family (minute_metrics,
     product_velocity, alerts_summary before its roll-up), so a sealed
     window streams the batch query's row.
+
+    The envelope is parsed once (`split_envelope`) and both CDC queries
+    read its `changes`: a line that is not JSON, or has no `op`, is not
+    counted in cdc_stats and does not touch latest_state. Its
+    dead-letter frame is not written by any query here.
     """
     ck = f"{out_dir}/_checkpoints"
-    changes = parse_envelope(raw_cdc, cdc_table)
+    changes, _ = split_envelope(raw_cdc, cdc_table)
     p = StreamingPipelines()
     p.queries["cdc_stats"] = _overwrite_sink(
         cdc_stats_stream(changes), f"{out_dir}/cdc_stats", f"{ck}/cdc_stats", "cdc_stats"

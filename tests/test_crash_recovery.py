@@ -1,7 +1,8 @@
-"""Crash recovery of the latest-state delta runs, by fault injection.
+"""Crash recovery of the streaming sinks, by fault injection.
 
-Two crash points inside the W10 foreachBatch (streaming/cdc_stream.py),
-each injected by monkeypatching, then a restart on the SAME checkpoint:
+Two crash points inside the W10 latest-state foreachBatch
+(streaming/cdc_stream.py), each injected by monkeypatching, then a
+restart on the SAME checkpoint:
 
 (a) after the trigger's writes (its run, and here also a compaction),
     before the offset commit — the batch is replayed;
@@ -13,22 +14,39 @@ Either way the end state must equal an uninterrupted run's: the same
 newest row per key, tombstones included. After (b) the raw rows and the
 run directories are the same too; after (a) the replayed run may still
 sit beside the base that already folded it, a superset with the same
-view."""
+view.
+
+Two more at the other sinks of streaming/pipeline.py:
+
+(c) the cdc_stats overwrite fails after Spark deleted the old snapshot
+    and before the new one commits; the replayed batch must rewrite the
+    same counts, none counted twice;
+(d) the minute_metrics file sink dies between its offset-log and
+    commit-log writes, after its files and sink-log entry are written;
+    the replayed batch must emit no window a second time.
+"""
 
 import json
 import os
 import pathlib
 
 import pytest
+from pyspark.sql import DataFrameWriter, Window
+from pyspark.sql import functions as F
 
-from cdc_stream_batch_etl_spark.sources.files import text_stream
+from cdc_stream_batch_etl_spark.catalog import load_table
+from cdc_stream_batch_etl_spark.operators.windows import minute_metrics_of
+from cdc_stream_batch_etl_spark.sources.files import parquet_stream, text_stream
 from cdc_stream_batch_etl_spark.streaming import cdc_stream
 from cdc_stream_batch_etl_spark.streaming.cdc_stream import (
+    cdc_stats_stream,
     latest_state_query,
     newest_wins,
     parse_envelope,
     read_latest_state,
+    split_envelope,
 )
+from cdc_stream_batch_etl_spark.streaming.pipeline import _overwrite_sink, _parquet_sink
 
 
 def _env(op, ts_ms, cid, name):
@@ -161,3 +179,90 @@ def test_crash_inside_compaction_before_run_deletion(spark, tmp_path, monkeypatc
     assert _view(spark, state) == _view(spark, uninterrupted)
     assert _raw(spark, state) == _raw(spark, uninterrupted)
     assert _run_dirs(state) == _run_dirs(uninterrupted)
+
+
+# per (table, op), over all of FILES: what an uninterrupted run counts
+FINAL_STATS = {("customers", "c"): 5, ("customers", "u"): 5, ("customers", "d"): 1}
+
+
+def _stats_run(spark, src: pathlib.Path, stats: str, ckpt: str):
+    changes, _ = split_envelope(text_stream(spark, str(src)), "customers")
+    q = _overwrite_sink(cdc_stats_stream(changes), stats, ckpt, "cdc_stats")
+    q.awaitTermination(120)
+    return q
+
+
+def _stats(spark, stats):
+    rows = spark.read.parquet(stats).collect()
+    assert len(rows) == len({(r.table, r.op) for r in rows}), "a (table, op) counted twice"
+    return {(r.table, r.op): r.event_count for r in rows}
+
+
+def test_crash_between_snapshot_delete_and_commit(spark, tmp_path, monkeypatch):
+    stats = str(tmp_path / "stats")
+
+    # the second snapshot write (batch 1) overwrites a frame whose tasks
+    # fail: Spark deletes the old snapshot, then the job fails uncommitted
+    real = DataFrameWriter.parquet
+    writes = []
+
+    def failing_second_write(self, path, *args, **kwargs):
+        if path == stats:
+            writes.append(path)
+            if len(writes) == 2:
+                poisoned = self._df.select(
+                    F.raise_error(F.lit("injected crash before the snapshot commit"))
+                )
+                return real(poisoned.write.mode("overwrite"), path)
+        return real(self, path, *args, **kwargs)
+
+    src, ckpt = _source(tmp_path, "src"), str(tmp_path / "ckpt")
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_second_write)
+    with pytest.raises(Exception, match="injected crash"):
+        _stats_run(spark, src, stats, ckpt)
+    # the old snapshot is gone and no new one committed
+    assert not list(pathlib.Path(stats).glob("*.parquet"))
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", real)
+    _stats_run(spark, src, stats, ckpt)  # replays batch 1, then runs 2 and 3
+    assert _stats(spark, stats) == FINAL_STATS
+
+
+def test_windowed_sink_killed_between_offset_and_commit_log(spark, tmp_path, sf_dir):
+    """The file sink commits inside the JVM, and no Python code runs
+    between its sink-log commit and the commit-log write, so the kill
+    is reproduced as the checkpoint it leaves: the run completes, then
+    the commit-log entry of its last batch is removed. That batch's
+    offset-log entry, data files and sink-log entry stay."""
+    events = load_table(spark, sf_dir, "events")
+    ev_src = str(tmp_path / "ev")
+    ordered = events.withColumn("__q", F.ntile(3).over(Window.orderBy("ts")))
+    for q in range(1, 4):
+        ordered.filter(F.col("__q") == q).drop("__q").coalesce(1).write.parquet(f"{ev_src}/b{q}")
+
+    def run(out, ckpt):
+        stream = parquet_stream(spark, ev_src + "/b*", events.schema)
+        q = _parquet_sink(minute_metrics_of(stream), out, ckpt, "minute_metrics")
+        q.awaitTermination(120)
+        assert q.exception() is None
+        return q
+
+    def windows(out):
+        return [tuple(r) for r in spark.read.parquet(out).collect()]
+
+    out, ckpt = str(tmp_path / "out"), tmp_path / "ckpt"
+    q = run(out, str(ckpt))
+    uninterrupted = windows(out)
+    last = max(int(p.name) for p in (ckpt / "commits").iterdir() if p.name.isdigit())
+    assert (ckpt / "offsets" / str(last)).exists()
+    # the killed batch emitted windows (append mode emits the windows it
+    # evicts from state), so a replay that wrote them again would show
+    evicted = {p["batchId"]: p["stateOperators"][0]["numRowsRemoved"] for p in q.recentProgress}
+    assert evicted[last] > 0
+    (ckpt / "commits" / str(last)).unlink()
+
+    run(out, str(ckpt))  # replays the last batch
+    assert (ckpt / "commits" / str(last)).exists()
+    got = windows(out)
+    assert len(got) == len(set(got)), "a window was emitted twice"
+    assert sorted(got) == sorted(uninterrupted)

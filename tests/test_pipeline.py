@@ -3,7 +3,9 @@ concurrently from file sources and land their output tables, and the
 windowed sinks stream the registered batch queries' rows."""
 
 import json
+import time
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -11,7 +13,7 @@ from cdc_stream_batch_etl_spark.catalog import load_table
 from cdc_stream_batch_etl_spark.operators.windows import minute_metrics, product_velocity
 from cdc_stream_batch_etl_spark.sources.files import text_stream
 from cdc_stream_batch_etl_spark.streaming.cdc_stream import read_latest_state
-from cdc_stream_batch_etl_spark.streaming.pipeline import start_pipelines
+from cdc_stream_batch_etl_spark.streaming.pipeline import StreamingPipelines, start_pipelines
 
 
 def _env(op, ts_ms, cid, name):
@@ -93,3 +95,90 @@ def test_full_streaming_pipeline(spark, tmp_path, sf_dir):
         "MEDIUM",
         "HIGH",
     }
+
+
+def test_malformed_envelopes_are_not_changes(spark, tmp_path, sf_dir):
+    """A non-JSON line and an envelope without `op` reach neither
+    cdc_stats nor latest_state: the stats hold only the real (table, op)
+    counts, and the missing-op line, newer than key 1's update, does not
+    shadow it."""
+    cdc_src = tmp_path / "cdc"
+    cdc_src.mkdir()
+    missing_op = json.loads(_env("u", 9000, 1, "ghost"))
+    del missing_op["op"]
+    (cdc_src / "a.txt").write_text(
+        "\n".join(
+            [
+                _env("c", 1000, 1, "u1"),
+                _env("c", 1001, 2, "u2"),
+                "not json {",
+                json.dumps(missing_op),
+                _env("u", 2000, 1, "u1-v2"),
+            ]
+        )
+        + "\n"
+    )
+    events = load_table(spark, sf_dir, "events")
+    ev_src = str(tmp_path / "ev")
+    events.orderBy("ts").limit(50).coalesce(1).write.parquet(ev_src)
+
+    out = str(tmp_path / "out")
+    p = start_pipelines(
+        text_stream(spark, str(cdc_src)),
+        spark.readStream.schema(events.schema).parquet(ev_src),
+        load_table(spark, sf_dir, "customer"),
+        load_table(spark, sf_dir, "nation"),
+        out,
+    )
+    p.await_all(300)
+    assert all(q.exception() is None for q in p.queries.values())
+
+    stats = {(r.table, r.op): r.event_count for r in spark.read.parquet(f"{out}/cdc_stats").collect()}
+    assert stats == {("customers", "c"): 2, ("customers", "u"): 1}
+    state = {
+        r.pk: json.loads(r.payload_json)["first_name"]
+        for r in read_latest_state(spark, f"{out}/latest_state").collect()
+    }
+    assert state == {1: "u1-v2", 2: "u2"}
+
+
+class _StubQuery:
+    """Never terminates within the time it is given; records that time."""
+
+    def __init__(self, waits, failure=None):
+        self.waits, self.failure = waits, failure
+
+    def awaitTermination(self, timeout):
+        self.waits.append(timeout)
+        if self.failure is not None:
+            raise self.failure
+        time.sleep(timeout)
+        return False
+
+    def exception(self):
+        return self.failure
+
+
+def test_await_all_shares_one_deadline():
+    waits = []
+    p = StreamingPipelines({f"q{i}": _StubQuery(waits) for i in range(5)})
+    t0 = time.monotonic()
+    p.await_all(0.4)
+    assert time.monotonic() - t0 < 0.4 + 0.2
+    assert sum(waits) <= 0.4
+
+
+def test_await_all_raises_the_first_failed_query():
+    waits = []
+    first, second = RuntimeError("first failed"), RuntimeError("second failed")
+    p = StreamingPipelines(
+        {"a": _StubQuery(waits, first), "b": _StubQuery(waits, second)}
+    )
+    with pytest.raises(RuntimeError, match="first failed"):
+        p.await_all(1)
+    assert len(waits) == 1
+
+    # a query that failed is reported even after the deadline has passed
+    p = StreamingPipelines({"slow": _StubQuery(waits), "failed": _StubQuery(waits, second)})
+    with pytest.raises(RuntimeError, match="second failed"):
+        p.await_all(0.2)
