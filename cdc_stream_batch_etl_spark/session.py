@@ -29,6 +29,24 @@ sidecars are unchanged. ``get_spark`` only builds ``local[N]`` sessions,
 so only local checkpoints take this path: a cluster deployment (HDFS or
 an object store) builds its own session and keeps Spark's default
 manager.
+
+Spark's generated code is cached JVM-wide in an LRU of compiled classes
+(``spark.sql.codegen.cache.maxEntries``, 100 by default), and
+``get_spark`` sizes it to ``CODEGEN_CACHE_ENTRIES``. Structured
+Streaming plans the same incremental query again on every trigger, so
+each trigger asks for classes an earlier trigger already compiled: a
+cold drain of ``start_pipelines`` needs about 185 classes and a
+perfbench streaming cycle with its point reads about 225. At 100 the
+LRU evicted them, and every trigger recompiled them with Janino on its
+stream-execution thread before its tasks ran. At 1024, about four times
+that working set, classes used every trigger stay cached. What still
+compiles on each trigger is code with a literal Spark writes straight
+into it: the watermark predicates, the ``latest_state`` run write
+(its ``batch_seq`` is ``F.lit(batch_id)``) and a point read's
+``pk = <literal>`` scan. Those classes are used once and age out first.
+The conf is static: it takes effect only when ``get_spark`` builds the
+JVM's first session, and a session that a caller of ``__spark_entry__``
+builds itself keeps Spark's default.
 """
 
 from __future__ import annotations
@@ -42,6 +60,11 @@ CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+
+#: Compiled generated classes kept JVM-wide: about 4x the streaming
+#: pipeline's working set, so a trigger reuses the classes an earlier
+#: trigger compiled.
+CODEGEN_CACHE_ENTRIES = 1024
 
 
 def get_spark(
@@ -73,6 +96,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

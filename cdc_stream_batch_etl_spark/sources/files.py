@@ -12,21 +12,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def parquet_stream(
-    spark: SparkSession, path: str, schema: T.StructType, files_per_trigger: int = 1
-) -> DataFrame:
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(files_per_trigger))
-        .parquet(path)
-    )
+def parquet_stream(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(path)
 
 
-def text_stream(
-    spark: SparkSession, path: str, files_per_trigger: int = 1
-) -> DataFrame:
+def text_stream(spark: SparkSession, path: str) -> DataFrame:
     """Lines as a `value` string column — the same shape a Kafka source
-    presents after `.cast("string")`, so parse_envelope works unchanged."""
-    return (
-        spark.readStream.option("maxFilesPerTrigger", str(files_per_trigger)).text(path)
-    )
+    presents after `.cast("string")`, so split_envelope works unchanged."""
+    return spark.readStream.option("maxFilesPerTrigger", "1").text(path)

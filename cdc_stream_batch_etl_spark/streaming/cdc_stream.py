@@ -41,27 +41,13 @@ def _change_frame(parsed: DataFrame) -> DataFrame:
     )
 
 
-def parse_envelope(raw: DataFrame, table: str, row_schema=None) -> DataFrame:
+def split_envelope(
+    raw: DataFrame, table: str, row_schema=None
+) -> tuple[DataFrame, DataFrame]:
     """S5: Kafka value bytes → typed envelope → flat change frame
-    (cdc_processor.py:26-43). `raw` must have a `value` (string/binary)
-    column, e.g. from readStream.format('kafka').
-
-    ``row_schema`` overrides the registered table schema — the Debezium
-    ALTER TABLE path (SURVEY S11): when the upstream table gains a
-    column, the consumer restarts on the SAME checkpoint with the
-    widened schema; from_json reads old envelopes (missing field →
-    NULL) and new ones alike, and the downstream latest-state merge is
-    schema-agnostic (payload travels as JSON), so old run files and
-    new-envelope rows coexist — torture-tested in
-    tests/test_schema_evolution.py."""
-    env = schemas.cdc_envelope(row_schema or schemas.TABLE_SCHEMAS[table])
-    return _change_frame(
-        raw.select(F.from_json(F.col("value").cast("string"), env).alias("e"))
-    )
-
-
-def split_envelope(raw: DataFrame, table: str) -> tuple[DataFrame, DataFrame]:
-    """S5 with DEAD-LETTER routing: the reference wraps every event in
+    (cdc_processor.py:26-43), with DEAD-LETTER routing. `raw` must have
+    a `value` (string/binary) column, e.g. from
+    readStream.format('kafka'). The reference wraps every event in
     try/except and logs-and-continues on malformed payloads
     (cdc_processor.py:64-68, 277-279) — an event that can't parse must
     not kill the pipeline, but silently dropping it loses the forensic
@@ -77,8 +63,17 @@ def split_envelope(raw: DataFrame, table: str) -> tuple[DataFrame, DataFrame]:
     into it, so a plain select + filter ran from_json three times per
     row, while a filter on a generator's output stays above it and
     from_json runs once.
+
+    ``row_schema`` overrides the registered table schema — the Debezium
+    ALTER TABLE path (SURVEY S11): when the upstream table gains a
+    column, the consumer restarts on the SAME checkpoint with the
+    widened schema; from_json reads old envelopes (missing field →
+    NULL) and new ones alike, and the downstream latest-state merge is
+    schema-agnostic (payload travels as JSON), so old run files and
+    new-envelope rows coexist — torture-tested in
+    tests/test_schema_evolution.py.
     """
-    env = schemas.cdc_envelope(schemas.TABLE_SCHEMAS[table])
+    env = schemas.cdc_envelope(row_schema or schemas.TABLE_SCHEMAS[table])
     value = F.col("value").cast("string")
     parsed = raw.select(
         value.alias("raw_value"), F.explode(F.array(F.from_json(value, env))).alias("e")

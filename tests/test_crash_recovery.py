@@ -42,7 +42,6 @@ from cdc_stream_batch_etl_spark.streaming.cdc_stream import (
     cdc_stats_stream,
     latest_state_query,
     newest_wins,
-    parse_envelope,
     read_latest_state,
     split_envelope,
 )
@@ -80,7 +79,7 @@ COMPACT_AFTER = 2
 
 
 def _run(spark, src: pathlib.Path, state: str, ckpt: str):
-    changes = parse_envelope(text_stream(spark, str(src)), "customers")
+    changes = split_envelope(text_stream(spark, str(src)), "customers")[0]
     q = latest_state_query(changes, "customers", state, ckpt)
     q.awaitTermination(120)
     return q

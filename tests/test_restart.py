@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 from cdc_stream_batch_etl_spark.sources.files import text_stream
 from cdc_stream_batch_etl_spark.streaming.cdc_stream import (
     latest_state_query,
-    parse_envelope,
     read_latest_state,
+    split_envelope,
 )
 
 
@@ -45,7 +45,7 @@ def test_latest_state_exactly_once_across_restart(spark, tmp_path):
     )
 
     def start():
-        changes = parse_envelope(text_stream(spark, str(src)), "customers")
+        changes = split_envelope(text_stream(spark, str(src)), "customers")[0]
         return latest_state_query(changes, "customers", state, ckpt)
 
     q = start()

@@ -117,8 +117,8 @@ def test_merge_survives_mid_stream_column_add(spark, tmp_path, state_provider):
     from cdc_stream_batch_etl_spark.streaming.cdc_stream import (
         latest_state_query,
         newest_wins,
-        parse_envelope,
         read_latest_state,
+        split_envelope,
     )
 
     src = tmp_path / "src"
@@ -133,7 +133,9 @@ def test_merge_survives_mid_stream_column_add(spark, tmp_path, state_provider):
     )
 
     def start(row_schema):
-        changes = parse_envelope(text_stream(spark, str(src)), "customers", row_schema)
+        changes = split_envelope(
+            text_stream(spark, str(src)), "customers", row_schema
+        )[0]
         return latest_state_query(changes, "customers", state, ckpt)
 
     q = start(None)

@@ -17,8 +17,8 @@ from cdc_stream_batch_etl_spark.sources.files import text_stream
 from cdc_stream_batch_etl_spark.streaming.cdc_stream import (
     cdc_stats_stream,
     latest_state_query,
-    parse_envelope,
     read_latest_state,
+    split_envelope,
 )
 
 
@@ -71,7 +71,7 @@ def cdc_fixture(tmp_path):
 
 def test_latest_state_upsert_with_deletes(spark, tmp_path, cdc_fixture):
     raw = text_stream(spark, str(cdc_fixture))
-    changes = parse_envelope(raw, "customers")
+    changes = split_envelope(raw, "customers")[0]
     q = latest_state_query(
         changes,
         "customers",
@@ -92,7 +92,7 @@ def test_latest_state_upsert_with_deletes(spark, tmp_path, cdc_fixture):
 
 def test_cdc_stats_stream(spark, cdc_fixture):
     raw = text_stream(spark, str(cdc_fixture))
-    changes = parse_envelope(raw, "customers")
+    changes = split_envelope(raw, "customers")[0]
     q = (
         cdc_stats_stream(changes)
         .writeStream.outputMode("complete")
