@@ -127,18 +127,18 @@ def _count_noise(log_path: str) -> tuple[int, int]:
 
 
 def _failed_tasks(spark) -> int:
-    """Sum task failures over every retained stage of the run."""
-    tracker = spark.sparkContext.statusTracker()
-    total, misses, i = 0, 0, 0
-    while misses < 200:  # stage ids are dense from 0; stop after a long gap
-        info = tracker.getStageInfo(i)
-        if info is None:
-            misses += 1
-        else:
-            misses = 0
-            total += info.numFailedTasks
-        i += 1
-    return total
+    """Sum task failures over every retained stage of the run (the last
+    attempt of each stage, as ``statusTracker().getStageInfo`` reports)."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    stages = sc._jsc.sc().statusStore().stageList(
+        jvm.java.util.ArrayList(), False, False,
+        sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
+    )
+    # the list is ordered by (stage id, attempt id): later attempts win
+    last = {s.stageId(): s.numFailedTasks()
+            for s in jvm.scala.jdk.javaapi.CollectionConverters.asJava(stages)}
+    return sum(last.values())
 
 
 def time_query(spark, name: str, sf_dir: str) -> float:

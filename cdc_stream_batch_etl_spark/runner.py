@@ -12,15 +12,39 @@ Spark shape: each "Redis key family" is a parquet output table written
 under out_dir/<name>/run_ts=<ts>/ with a `latest` copy (S7) — at 100 TB
 the run_ts partition IS the retention mechanism the reference's TTLs
 approximate (drop old partitions instead of key expiry).
+
+Concurrency: the outputs are independent, so a run overlaps them on the
+caller's session. Each chain — one ``BATCH_QUERIES`` output plus the
+``DERIVED_QUERIES`` histogram that reads it — runs on its own thread,
+and ``health_check`` probes its five sources the same way. Every thread
+is entered through ``inheritable_thread_target``, so its jobs keep the
+caller's job group and local properties. Results keep the registry order
+(batch outputs first, then derived), and a chain's exception reaches the
+caller.
+
+Writes: each output is ONE Spark write, the observed write into
+``run_ts=<ts>``; ``latest`` is a file-level copy of the committed files
+through Hadoop's ``FileSystem`` (no second job), still a parquet
+directory. The run summary is built from an Arrow table on the JVM, so
+a run starts no Python worker.
+
+Persist contract: ``run_batch_pipeline`` clears the cache once, after
+every chain has finished (per output it would drop a running chain's
+persisted frame), also when a chain raises; ``run_query`` clears it
+after each query.
 """
 
 from __future__ import annotations
 
 import time
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .catalog import load_table
 from .operators.orders import order_analytics
@@ -43,6 +67,8 @@ DERIVED_QUERIES = {
     "stock_status_histogram": ("product_insights", stock_status_histogram),
 }
 
+SOURCE_TABLES = ("customer", "orders", "lineitem", "part", "events")
+
 
 @dataclass
 class RunResult:
@@ -53,17 +79,30 @@ class RunResult:
     duration_sec: float = 0.0
 
 
+def _concurrently(spark: SparkSession, fn: Callable, args: Sequence) -> list:
+    """``[fn(a) for a in args]``, one thread per item on the caller's
+    session. Each call is wrapped here, in the caller's thread, so it
+    runs under its own copy of the caller's local properties (job group,
+    scheduler pool); a shared copy would let one thread's SQL execution
+    id leak into another's jobs. Waits for every call, then returns the
+    results in order, raising the first failure."""
+    with ThreadPoolExecutor(len(args)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn), a) for a in args]
+    return [f.result() for f in futures]
+
+
 def health_check(spark: SparkSession, sf_dir: str) -> dict[str, bool]:
     """Source-availability probe (the reference's Debezium/Kafka/Redis
     health checks, etl_monitoring.py:44-317, become: can each source table
-    be opened and is it non-empty)."""
-    out = {}
-    for t in ("customer", "orders", "lineitem", "part", "events"):
+    be opened and is it non-empty). The five probes run concurrently."""
+
+    def probe(t: str) -> bool:
         try:
-            out[t] = load_table(spark, sf_dir, t).limit(1).count() > 0
+            return load_table(spark, sf_dir, t).limit(1).count() > 0
         except Exception:
-            out[t] = False
-    return out
+            return False
+
+    return dict(zip(SOURCE_TABLES, _concurrently(spark, probe, SOURCE_TABLES)))
 
 
 def quality_gate(name: str, df: DataFrame) -> list[str]:
@@ -71,7 +110,7 @@ def quality_gate(name: str, df: DataFrame) -> list[str]:
     cdc_etl_orchestration.py:295-357, minus the broken Redis API calls).
 
     Standalone spelling (extra actions) for ad-hoc use; inside the run
-    loop the same metrics ride the `latest` write via ``observe()`` —
+    loop the same metrics ride the `run_ts` write via ``observe()`` —
     see _observed_write — so the gate costs ZERO additional scans there."""
     failures = []
     cnt = df.count()
@@ -139,11 +178,30 @@ def run_query(
         spark.catalog.clearCache()
 
 
+def _copy_dir(spark: SparkSession, src: str, dst: str) -> None:
+    """Replace directory ``dst`` with a file-level copy of ``src``
+    through Hadoop's FileSystem (any scheme Spark writes to). The copy
+    lands in a hidden sibling first and is renamed into place, so a
+    reader never lists a half-copied ``dst``."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    Path = jvm.org.apache.hadoop.fs.Path
+    src_p, dst_p = Path(src), Path(dst)
+    tmp_p = Path(dst_p.getParent(), f"_{dst_p.getName()}.copying")
+    fs = src_p.getFileSystem(conf)
+    fs.delete(tmp_p, True)
+    if not jvm.org.apache.hadoop.fs.FileUtil.copy(fs, src_p, fs, tmp_p, False, conf):
+        raise OSError(f"could not copy {src} to {tmp_p}")
+    fs.delete(dst_p, True)
+    if not fs.rename(tmp_p, dst_p):
+        raise OSError(f"could not rename {tmp_p} to {dst}")
+
+
 def run_batch_pipeline(
     spark: SparkSession, sf_dir: str, out_dir: str, run_ts: str | None = None
 ) -> RunResult:
-    """One E-T-L cycle: health check → the three batch transforms →
-    timestamped + latest outputs → quality gate + summary."""
+    """One E-T-L cycle: health check → the three output chains,
+    concurrently → timestamped + latest outputs → quality gate + summary."""
     t0 = time.perf_counter()
     run_ts = run_ts or time.strftime("%Y%m%d_%H%M%S", time.gmtime())
     result = RunResult(run_ts=run_ts)
@@ -154,37 +212,49 @@ def run_batch_pipeline(
         result.quality_failures = [f"source unavailable: {k}" for k, v in health.items() if not v]
         return result
 
-    def _publish(name: str, df: DataFrame) -> None:
+    def publish(name: str, df: DataFrame) -> tuple[int, list[str]]:
         run_path = f"{out_dir}/{name}/run_ts={run_ts}"
-        df.write.mode("overwrite").parquet(run_path)
-        # `latest` is a straight copy of the materialized run output — a
-        # column-for-column parquet rewrite, NOT a second execution of the
-        # query (the reference writes the same payload to both keys too,
-        # batch_processor.py:186-191)
-        cnt, fails = _observed_write(
-            name, spark.read.parquet(run_path), f"{out_dir}/{name}/latest"
-        )
+        cnt, fails = _observed_write(name, df, run_path)
+        # `latest` is the same payload as the run (the reference writes it
+        # to both keys too, batch_processor.py:186-191): copy the
+        # committed files rather than run a second read-and-write job
+        _copy_dir(spark, run_path, f"{out_dir}/{name}/latest")
+        return cnt, fails
+
+    def chain(name: str) -> dict[str, tuple[int, list[str]]]:
+        out = {name: publish(name, BATCH_QUERIES[name](spark, sf_dir))}
+        for derived, (upstream, fn) in DERIVED_QUERIES.items():
+            if upstream == name:
+                src = spark.read.parquet(f"{out_dir}/{name}/latest")
+                out[derived] = publish(derived, fn(spark, sf_dir, source_df=src))
+        return out
+
+    try:
+        chains = _concurrently(spark, chain, list(BATCH_QUERIES))
+    finally:
+        # persist contract: outputs are on disk now (or the run failed);
+        # drop the bounded frames the queries cached, once every chain is
+        # done, so back-to-back runs can't accumulate executor storage
+        spark.catalog.clearCache()
+    published = {k: v for out in chains for k, v in out.items()}
+    for name in (*BATCH_QUERIES, *DERIVED_QUERIES):
+        cnt, fails = published[name]
         result.row_counts[name] = cnt
         result.quality_failures.extend(fails)
-        # persist contract: outputs are on disk now; drop any bounded
-        # frames the query cached so back-to-back runs can't accumulate
-        # executor storage
-        spark.catalog.clearCache()
-
-    for name, fn in BATCH_QUERIES.items():
-        _publish(name, fn(spark, sf_dir))
-    for name, (upstream, fn) in DERIVED_QUERIES.items():
-        src = spark.read.parquet(f"{out_dir}/{upstream}/latest")
-        _publish(name, fn(spark, sf_dir, source_df=src))
 
     result.quality_passed = not result.quality_failures
     result.duration_sec = round(time.perf_counter() - t0, 3)
 
+    # an Arrow table goes to the JVM as is: no Python worker starts
+    n = len(result.row_counts)
     summary = spark.createDataFrame(
-        [
-            (run_ts, name, cnt, result.quality_passed, result.duration_sec)
-            for name, cnt in result.row_counts.items()
-        ],
+        pa.table({
+            "run_ts": [run_ts] * n,
+            "table_name": list(result.row_counts),
+            "row_count": list(result.row_counts.values()),
+            "quality_passed": [result.quality_passed] * n,
+            "duration_sec": [result.duration_sec] * n,
+        }),
         "run_ts string, table_name string, row_count long, quality_passed boolean, duration_sec double",
     )
     summary.write.mode("append").parquet(f"{out_dir}/batch_summary")
