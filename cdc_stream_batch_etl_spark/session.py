@@ -11,7 +11,10 @@ Scale notes (100 TB):
   runtime re-plan shuffle partition counts and split skewed join partitions.
 - ``spark.sql.shuffle.partitions`` defaults to the local core count here;
   on a 1000-executor cluster it should be ~2-3x total cores (set via
-  ``SPARK_GRAFT_SHUFFLE_PARTITIONS``).
+  ``SPARK_GRAFT_SHUFFLE_PARTITIONS``). It is the session's total:
+  ``streaming/pipeline.start_pipelines`` starts each of its five
+  concurrent queries with ``max(1, P // 5)`` of it, and a stateful query
+  keeps the count its checkpoint recorded at first start.
 - parquet filter pushdown / column pruning are left at their defaults (on).
 
 Streaming checkpoints commit through Spark's FileSystem-based checkpoint

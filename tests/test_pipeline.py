@@ -3,6 +3,7 @@ concurrently from file sources and land their output tables, and the
 windowed sinks stream the registered batch queries' rows."""
 
 import json
+import pathlib
 import time
 
 import pytest
@@ -11,9 +12,15 @@ from pyspark.sql import functions as F
 
 from cdc_stream_batch_etl_spark.catalog import load_table
 from cdc_stream_batch_etl_spark.operators.windows import minute_metrics, product_velocity
-from cdc_stream_batch_etl_spark.sources.files import text_stream
+from cdc_stream_batch_etl_spark.sources.files import parquet_stream, text_stream
+from cdc_stream_batch_etl_spark.streaming import pipeline
 from cdc_stream_batch_etl_spark.streaming.cdc_stream import read_latest_state
 from cdc_stream_batch_etl_spark.streaming.pipeline import StreamingPipelines, start_pipelines
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+#: the queries that keep state in a state store (latest_state keeps its
+#: own parquet runs)
+STATEFUL = ("cdc_stats", "minute_metrics", "velocity", "alerts")
 
 
 def _env(op, ts_ms, cid, name):
@@ -182,3 +189,120 @@ def test_await_all_raises_the_first_failed_query():
     p = StreamingPipelines({"slow": _StubQuery(waits), "failed": _StubQuery(waits, second)})
     with pytest.raises(RuntimeError, match="second failed"):
         p.await_all(0.2)
+
+
+def _write_inputs(spark, tmp_path, sf_dir, parts):
+    """CDC change files and time-ordered events files, one of each per
+    part in `parts` (of 3): the pipeline drains one file per trigger."""
+    cdc_src, ev_src = tmp_path / "cdc", tmp_path / "ev"
+    cdc_src.mkdir(exist_ok=True)
+    for b in parts:
+        op = "c" if b == 1 else "u"
+        (cdc_src / f"b{b}.txt").write_text(
+            "\n".join(_env(op, 1000 * b + i, i, f"u{i}-{b}") for i in range(6)) + "\n"
+        )
+    events = load_table(spark, sf_dir, "events")
+    ordered = events.withColumn("__q", F.ntile(3).over(Window.orderBy("ts")))
+    for q in parts:
+        ordered.filter(F.col("__q") == q).drop("__q").coalesce(1).write.parquet(
+            f"{ev_src}/b{q}"
+        )
+    return str(cdc_src), str(ev_src), events.schema
+
+
+def _drain(spark, sf_dir, inputs, out):
+    cdc_src, ev_src, schema = inputs
+    p = start_pipelines(
+        text_stream(spark, cdc_src),
+        parquet_stream(spark, ev_src + "/b*", schema),
+        load_table(spark, sf_dir, "customer"),
+        load_table(spark, sf_dir, "nation"),
+        out,
+    )
+    try:
+        p.await_all(300)
+    finally:
+        p.stop_all()
+    return p
+
+
+def _state_partitions(out, name) -> list:
+    """Partition directories per state operator of one query's checkpoint."""
+    state = pathlib.Path(out) / "_checkpoints" / name / "state"
+    return [
+        sum(d.is_dir() and d.name.isdigit() for d in op.iterdir())
+        for op in sorted(state.iterdir())
+        if op.name.isdigit()
+    ]
+
+
+def _sinks(spark, out) -> dict:
+    rows = {
+        sink: sorted(map(tuple, spark.read.parquet(f"{out}/{sink}").collect()))
+        for sink in ("cdc_stats", "minute_metrics", "velocity", "alerts")
+    }
+    rows["latest_state"] = sorted(map(tuple, read_latest_state(spark, f"{out}/latest_state").collect()))
+    return rows
+
+
+def test_queries_share_the_session_partitions(spark, tmp_path, sf_dir):
+    """Each query starts with max(1, P // 5) shuffle partitions, so each
+    stateful operator keeps that many state-store partitions, and the
+    caller's session reads its own P again once the queries run."""
+    total = spark.conf.get(SHUFFLE_PARTITIONS)
+    share = max(1, int(total) // 5)
+    assert share < int(total)
+    inputs = _write_inputs(spark, tmp_path, sf_dir, (1, 2))
+    out = str(tmp_path / "out")
+    p = _drain(spark, sf_dir, inputs, out)
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == total
+    assert all(q.exception() is None for q in p.queries.values())
+    for name in STATEFUL:
+        assert set(_state_partitions(out, name)) == {share}, name
+    assert not (tmp_path / "out" / "_checkpoints" / "latest_state" / "state").exists()
+
+
+def test_a_failed_start_stops_the_started_queries(spark, tmp_path, sf_dir, monkeypatch):
+    """A query that fails to build or start (here the last, alerts)
+    raises from start_pipelines, stops the four queries it had already
+    started and leaves the caller's partition count as it was."""
+
+    def broken(*args):
+        raise RuntimeError("alerts failed to build")
+
+    monkeypatch.setattr(pipeline, "alerts_stream", broken)
+    total = spark.conf.get(SHUFFLE_PARTITIONS)
+    before = {q.id for q in spark.streams.active}
+    inputs = _write_inputs(spark, tmp_path, sf_dir, (1,))
+    with pytest.raises(RuntimeError, match="alerts failed to build"):
+        _drain(spark, sf_dir, inputs, str(tmp_path / "out"))
+    assert {q.id for q in spark.streams.active} == before
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == total
+
+
+def test_restart_keeps_the_checkpoint_partition_count(spark, tmp_path, sf_dir):
+    """A checkpoint created under another session P keeps its state
+    partition count on restart (Spark reads it from the offset log), and
+    the restarted pipeline's sinks equal an uninterrupted run's."""
+    total = spark.conf.get(SHUFFLE_PARTITIONS)
+    other = 5 * (max(1, int(total) // 5) + 1)  # a P whose share differs
+    out = str(tmp_path / "out")
+    first = _write_inputs(spark, tmp_path, sf_dir, (1,))
+    spark.conf.set(SHUFFLE_PARTITIONS, str(other))
+    try:
+        _drain(spark, sf_dir, first, out)
+    finally:
+        spark.conf.set(SHUFFLE_PARTITIONS, total)
+    created = {name: _state_partitions(out, name) for name in STATEFUL}
+    assert all(set(n) == {other // 5} for n in created.values()), created
+
+    every = _write_inputs(spark, tmp_path, sf_dir, (2, 3))  # arrives while down
+    _drain(spark, sf_dir, every, out)
+    assert {name: _state_partitions(out, name) for name in STATEFUL} == created
+
+    ref = str(tmp_path / "ref")
+    _drain(spark, sf_dir, every, ref)
+    assert set(_state_partitions(ref, "alerts")) == {max(1, int(total) // 5)}
+    want = _sinks(spark, ref)
+    assert all(want.values()), {sink: len(rows) for sink, rows in want.items()}
+    assert _sinks(spark, out) == want
